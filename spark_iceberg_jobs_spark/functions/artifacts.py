@@ -300,8 +300,9 @@ def swap_publish(staging: str, final_dir: str) -> None:
     destroyed. Distinct from ``publish_atomic``, which serves
     KEYED-IMMUTABLE artifacts: there a re-publish under the same key
     rightly discards the newcomer, which is exactly wrong for a table
-    that must replace (review finding, r8 — wap_write_parquet and
-    compact_parquet each hand-rolled this and had diverged).
+    that must replace (review finding, r8 — two table writers each
+    hand-rolled this and had diverged; ``plans.maintenance.compact_parquet``
+    publishes through it).
 
     Crash recovery (review finding, r8): a kill between the two renames
     strands the table at ``.swap_old.<pid>`` with final_dir missing; on

@@ -581,7 +581,9 @@ def semantic_dedup(
     from .similarity import _bucket_pair_scorer, assign_cells
 
     if max_cell_rows == "auto":
-        n = embeddings.count()  # parquet metadata count — no data scan
+        # a raw fixture scan counts from parquet metadata (no data scan);
+        # a filtered or derived frame pays a full scan and one job here
+        n = embeddings.count()
         max_cell_rows = max(2048, math.ceil(8 * n / max(len(cents), 1)))
     e = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v"))
     assigned = assign_cells(e, cents, vec_col="v").select("vid", "cell", "v")

@@ -1079,8 +1079,11 @@ def _mmr_greedy_cogroup(cand: DataFrame, pair: DataFrame, *, k: int, lam: float)
     picks max sim, later rounds max lam*sim - (1-lam)*max_{picked}(psim),
     ties to the lowest cid, NULL scores last, NULL psims ignored by the
     max (SQL MAX semantics), candidates exhausted early stop the rounds.
-    All floats are the JVM-computed inputs; the kernel's scalar IEEE ops
-    match the cascade's expressions bit for bit."""
+    All floats are the JVM-computed inputs; for finite and NULL
+    similarities the kernel's scalar IEEE ops match the cascade's
+    expressions bit for bit. NaN similarities (NaN/Inf embedding inputs)
+    are unsupported: the kernel treats NaN as NULL, while the cascade
+    orders NaN above every double and SQL MAX propagates it."""
     lam = float(lam)
     one_minus_lam = 1.0 - lam
 

@@ -150,9 +150,9 @@ def rewrite_position_delete_files_call(
 def rollback_to_snapshot_call(
     table: str, snapshot_id: int, *, catalog: str = "spark_catalog"
 ) -> str:
-    """``rollback_to_snapshot`` — the executed twin lives twice on the
-    fallback: writers.rollback_version (version-hint protocol) and the
-    maintenance_rollback_plan planner."""
+    """``rollback_to_snapshot`` — on the fallback,
+    maintenance_rollback_plan plans it and filetable.read_table(version=)
+    serves any retained snapshot; no executed rollback exists there."""
     _check_ident(table, "table")
     _check_ident(catalog, "catalog")
     if snapshot_id < 0:
@@ -167,7 +167,7 @@ def fast_forward_call(
     table: str, branch: str, *, to: str = "main", catalog: str = "spark_catalog"
 ) -> str:
     """``fast_forward`` — publish a WAP branch head; executed on the
-    fallback by writers.fast_forward (r10 branch-scoped WAP)."""
+    fallback by filetable.fast_forward_table (ancestry-gated)."""
     _check_ident(table, "table")
     _check_ident(catalog, "catalog")
     _check_ident(branch, "branch")

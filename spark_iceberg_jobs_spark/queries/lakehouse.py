@@ -1167,8 +1167,8 @@ def lake_changelog_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: cost is O(files changed between the versions), never
     O(table) — an append-only commit range reads exactly the appended
     files (Iceberg's incremental scan); the fallback two-full-scan diff
-    (writers.changelog_between_versions) is reserved for snapshots
-    whose visibility differs from their data files (live MOR deletes)."""
+    is reserved for snapshots whose visibility differs from their data
+    files (live MOR deletes)."""
     def build(staging: str) -> None:
         orders = read_fixture(spark, sf_dir, "orders").select(
             "o_orderkey",

@@ -3185,7 +3185,13 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chunks_doc = F.greatest(
         F.ceil((n_toks - F.lit(overlap)) / F.lit(stride)), F.lit(1)
     )
-    n_chunks = docs.select(F.sum(n_chunks_doc).alias("n")).collect()[0]["n"]
+    # a NULL-text document has no chunks: greatest() skips the NULL
+    # ceil and would count it as 1, inflating idf's chunk total
+    n_chunks = (
+        docs.filter(F.col("text").isNotNull())
+        .select(F.sum(n_chunks_doc).alias("n"))
+        .collect()[0]["n"]
+    )
     starts = F.sequence(
         F.lit(0), (n_chunks_doc - 1).cast("int") * stride, F.lit(stride)
     )
@@ -3269,6 +3275,7 @@ WITH base AS (
     SELECT doc_id, STRING_SPLIT(text, ' ') AS toks,
            LEN(STRING_SPLIT(text, ' ')) AS n
     FROM documents
+    WHERE text IS NOT NULL
 ), sized AS (
     SELECT doc_id, toks, n,
            GREATEST(CAST(CEIL((n - 4) / 12.0) AS BIGINT), 1) AS n_chunks

@@ -1,5 +1,5 @@
 from .readers import load_tables, read_csv, read_fixture, read_table, validate_dataframe
-from .writers import write_bucketed_table, write_parquet, write_table
+from .writers import write_bucketed_table, write_table
 
 __all__ = [
     "load_tables",
@@ -8,6 +8,5 @@ __all__ = [
     "read_table",
     "validate_dataframe",
     "write_bucketed_table",
-    "write_parquet",
     "write_table",
 ]

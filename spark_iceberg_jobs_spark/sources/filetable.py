@@ -1,8 +1,6 @@
 """File-grain manifest tables — the Iceberg DATA-FILE layer, executed.
 
-The versioned protocol in ``sources/writers.py`` (HadoopTables'
-version-hint commit/rollback/refs) stores a FULL data copy per version —
-correct for the commit semantics it models, but a real table format
+This is the engine's one versioned table protocol. A table format
 shares immutable data files between snapshots through MANIFESTS: each
 snapshot is a list of (file, row-count, per-column min/max bounds), and
 every table verb is a manifest edit plus, at most, a rewrite of the few
@@ -14,8 +12,8 @@ row-level DELETE and MERGE the Iceberg runtime would provide):
 - ``create_table`` / ``append_table`` — range-clustered immutable data
   files under ``data/c{commit}/`` with per-file column bounds collected
   in ONE distributed pass (group by ``input_file_name``), committed as
-  manifest ``m{n}.json`` + an atomic version-hint repoint (the same
-  CAS + ``os.replace`` discipline as ``versioned_write``).
+  manifest ``m{n}.json`` (claimed with ``O_EXCL``) + an atomic
+  version-hint repoint (write-tmp + ``os.replace``).
 - ``plan_scan`` / ``scan_range`` — zone-map data skipping: a range
   predicate intersects the driver-side file bounds and only surviving
   files reach ``spark.read.parquet`` — Iceberg's manifest pruning, the
@@ -37,6 +35,10 @@ row-level DELETE and MERGE the Iceberg runtime would provide):
   raise, matching Iceberg/Delta's multiple-match error.
 - ``snapshots_table`` / ``files_table`` — the ``snapshots`` and
   ``files`` metadata tables over the manifest history.
+- ``create_branch`` / ``append_table(branch=, audits=)`` /
+  ``fast_forward_table`` / ``tag_snapshot`` — Iceberg refs: audited
+  write-audit-publish appends on a branch, an ancestry-gated publish to
+  main, and immutable tags that ``expire_table`` retains.
 - ``expire_table`` — manifest retention + unreferenced-data-file
   reclamation (the orphan story at the data-file grain).
 
@@ -145,19 +147,29 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 
 def _manifest_versions(table_dir: str) -> list[int]:
+    """Every WRITTEN manifest version, oldest first. The header sidecar
+    is the last file a commit writes before it publishes (manifest, then
+    entry log, then header), so a claimed manifest without a header is an
+    in-flight commit — or the debris of one that died — and is not
+    listed: lock-free readers (gc_orphans' first pass, expire_table,
+    snapshots_table) never parse a half-written manifest, and a
+    committer that picks an in-flight number just moves past it on the
+    ``O_EXCL`` claim."""
     try:
-        names = os.listdir(_meta_dir(table_dir))
+        names = set(os.listdir(_meta_dir(table_dir)))
     except OSError:
         return []
     return sorted(
-        int(n[1:7]) for n in names if n.startswith("m") and n.endswith(".json")
+        int(n[1:7])
+        for n in names
+        if n.startswith("m") and n.endswith(".json") and f"hdr_{n}" in names
     )
 
 
 def current_manifest_version(table_dir: str) -> int:
     """The committed manifest per the hint file; raises on a missing or
     dangling hint — serving an arbitrary other manifest would be silent
-    wrong results (same posture as writers.current_version)."""
+    wrong results."""
     with open(os.path.join(_meta_dir(table_dir), _HINT)) as f:
         v = int(f.read().strip())
     if not os.path.exists(_manifest_path(table_dir, v)):
@@ -210,7 +222,7 @@ def _compose_full_entries(table_dir: str, man: dict) -> list[dict]:
     its commit-time entry log back; a delta resolves its base (recursion
     bounded by MANIFEST_DELTA_MAX_CHAIN — every deeper chain was
     materialized at commit time) and applies removed/added by entry id.
-    This is the legacy/under-threshold service path — O(#files) driver
+    This is the under-threshold service path — O(#files) driver
     memory, exactly what the past-threshold paths route around."""
     if man.get("entries_external"):
         return _read_entries_jsonl(table_dir, man["version"], man["stats_types"])
@@ -239,8 +251,8 @@ def _commit_manifest(
     validate=None,
 ) -> int:
     """CAS-claim the next manifest number with O_EXCL (two concurrent
-    committers land in distinct manifests; like _claim_version, numbers
-    are never reused while their file exists), then repoint the hint via
+    committers land in distinct manifests; numbers are never reused
+    while their file exists), then repoint the hint via
     write-tmp + ``os.replace`` — atomic on POSIX.
 
     OPTIMISTIC CONCURRENCY (r10): the compose-check-write runs under a
@@ -355,7 +367,7 @@ def _entry_to_rec(e: dict, stats_cols: list[str]) -> dict:
         "n_rows": e["rows"],
         "n_bytes": e["bytes"],
         "key_cols": (
-            json.dumps(_entry_key_cols(e))
+            json.dumps(e["key_cols"])
             if e.get("kind") == "eqdelete"
             else None
         ),
@@ -437,8 +449,6 @@ def _finish_commit(
 ) -> int:
     manifest["version"] = nxt
     # O(schema)-header entry count: the threshold dispatch reads this
-    # instead of approximating from manifest file size (r14 — delta
-    # manifests made the byte heuristic meaningless)
     manifest["n_entries"] = len(manifest["entries"])
     # data sequence number (Iceberg v2): entries added by THIS commit are
     # stamped with it; carried-over entries keep theirs. An equality
@@ -453,14 +463,19 @@ def _finish_commit(
         manifest.setdefault("names_at_seq", {})[str(nxt)] = new_names
     with os.fdopen(fd, "w") as f:
         json.dump(manifest, f, indent=1)
-    # commit-time sidecars for the two-level read path: the O(schema)
-    # header and the streamed flat entry log (see _write_entries_jsonl)
+    # commit-time sidecars for the two-level read path: the streamed
+    # flat entry log (see _write_entries_jsonl), then the O(schema)
+    # header — written last, it marks the version complete
+    # (_manifest_versions)
+    _write_entries_jsonl(table_dir, manifest, nxt)
     hp = _header_path(table_dir, nxt)
     tmp = f"{hp}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump({k: v for k, v in manifest.items() if k != "entries"}, f)
+        json.dump(
+            {**{k: v for k, v in manifest.items() if k != "entries"}, "form": "full"},
+            f,
+        )
     os.replace(tmp, hp)
-    _write_entries_jsonl(table_dir, manifest, nxt)
     return _publish_head(table_dir, nxt, branch)
 
 
@@ -495,36 +510,16 @@ def _publish_head(table_dir: str, nxt: int, branch: str | None) -> int:
 MANIFEST_DELTA_MAX_CHAIN = 8
 
 
-def _n_entries_approx(table_dir: str, version: int) -> int:
-    """The version's entry count from its O(schema) header (exact,
-    recorded at commit since r14); legacy versions fall back to the
-    manifest-file byte heuristic — correct for them, because every
-    legacy manifest is inline-full."""
-    try:
-        with open(_header_path(table_dir, version)) as f:
-            n = json.load(f).get("n_entries")
-        if n is not None:
-            return n
-    except (OSError, ValueError):
-        pass
-    return (
-        os.path.getsize(_manifest_path(table_dir, version))
-        // _MANIFEST_BYTES_PER_ENTRY
-    )
-
-
 def _manifest_form(table_dir: str, version: int) -> tuple[str, int | None]:
     """(form, delta_base) from the O(schema) header — how chain walks
     classify a version WITHOUT opening its manifest (an inline-full
     manifest is O(#files) bytes; parsing it to learn its form would
-    defeat the walk). A version with no header (or one predating the
-    form marker) is inline-full by construction — the delta format
-    postdates header sidecars."""
-    try:
-        with open(_header_path(table_dir, version)) as f:
-            h = json.load(f)
-    except (OSError, ValueError):
-        return "full", None
+    defeat the walk). ``form`` is "full" (inline entries), "delta" or
+    "external". Full-version headers written before full commits
+    recorded their form lack the key — tables that outlive the process,
+    such as published lakehouse artifacts, still hold them — and read
+    as "full"."""
+    h = read_manifest_header(table_dir, version)
     return h.get("form", "full"), h.get("delta_base")
 
 
@@ -548,20 +543,13 @@ def _materialize_entries_jsonl(table_dir: str, manifest: dict, nxt: int) -> int:
     version ``nxt``'s full entry log. Driver memory is O(sum of chain
     deltas) — the full list is never materialized in memory; the
     ancestor log streams line-at-a-time. Returns the exact entry count.
-
-    Caveat (documented, loud-failing): an entry log written before the
-    ``bucket`` field existed reconstructs bucket-laid-out entries
-    without their ids — the SPJ/compaction guards then raise and
-    ``rebucket_imported`` is the escape; logs written by this code are
-    lossless."""
+    Every full and external version has its entry log (written before
+    its header), and the log is lossless (``_entry_to_rec``)."""
     deltas: list[dict] = []
     v = manifest["delta"]["base"]
     while True:
         form, base = _manifest_form(table_dir, v)
         if form != "delta":
-            if not os.path.exists(_entries_jsonl_path(table_dir, v)):
-                # legacy cold path: written once per immutable version
-                _write_entries_jsonl(table_dir, read_manifest(table_dir, v), v)
             break
         deltas.append(_load_manifest_raw(table_dir, v)["delta"])
         v = base
@@ -602,11 +590,10 @@ def _manifest_for_write(
     table_dir: str, branch: str | None = None
 ) -> dict:
     """Two-level manifest access for a WRITE verb (VERDICT r13 item 1):
-    under the threshold, the resolved full manifest (entries inline —
-    byte-identical behavior to every prior round); past it, the
-    O(schema) header with ``entries: None`` — the verb then fetches only
-    the entries it touches from the parquet manifest table and commits a
-    DELTA through ``_commit_update``."""
+    under the threshold, the resolved full manifest (entries inline);
+    past it, the O(schema) header with ``entries: None`` — the verb then
+    fetches only the entries it touches from the parquet manifest table
+    and commits a DELTA through ``_commit_update``."""
     version = (
         branch_head(table_dir, branch)
         if branch is not None
@@ -635,9 +622,9 @@ def _commit_update(
 ) -> int:
     """The one commit API for entry-set updates, two-level:
 
-    - ``prev`` carries inline entries (under-threshold / legacy): the
-      classic path — compose the full list, commit through
-      ``_commit_manifest`` exactly as before;
+    - ``prev`` carries inline entries (under the threshold): compose
+      the full list and commit an inline-full manifest through
+      ``_commit_manifest``;
     - ``prev`` is a header view (``entries is None`` — past the
       threshold, from ``_manifest_for_write``): write a DELTA manifest
       — header fields + ``{base, removed, added}`` — in O(delta) driver
@@ -649,7 +636,7 @@ def _commit_update(
     commit whose additions are disjoint from anything concurrent by
     construction (fresh CAS commit dirs) — it rebases onto a concurrent
     winner instead of raising, like append_table always has. add_files
-    keeps the legacy path: its caller-chosen import paths need the
+    always commits inline-full: its caller-chosen import paths need the
     in-lock duplicate check only the full entry list provides."""
     stats_types = stats_types if stats_types is not None else prev["stats_types"]
     base_version = prev["version"]
@@ -730,7 +717,8 @@ def _commit_update(
             form = "external"
         else:
             manifest["n_entries"] = (
-                max(0, _n_entries_approx(table_dir, base) - len(removed_ids))
+                read_manifest_header(table_dir, base)["n_entries"]
+                - len(removed_ids)
                 + len(added_entries)
             )
             form = "delta"
@@ -825,7 +813,7 @@ def _next_commit_dir(table_dir: str) -> str:
     while True:
         cdir = os.path.join(data, f"c{nxt:06d}")
         try:
-            os.mkdir(cdir)  # CAS claim, like _claim_version
+            os.mkdir(cdir)  # CAS claim: EEXIST means another writer won
             return cdir
         except FileExistsError:
             nxt += 1
@@ -986,15 +974,16 @@ def append_table(
     what the commit's names_at_seq records).
 
     ``audits``: write-audit-publish — each callable runs against a
-    reader over the STAGED new files before anything becomes visible
-    (semantics of wap_write_parquet: None = pass, falsy return or any
-    exception fails the commit and the staged files are deleted).
+    reader over the STAGED new files before anything becomes visible.
+    ``None`` passes (assert-style audits that raise on failure); any
+    falsy return fails — truth-tested, so ``numpy.bool_(False)`` fails
+    too; any exception fails. A failed audit deletes the staged files
+    and commits nothing.
 
     ``branch``: commit onto a NAMED BRANCH — the manifest lands in the
     shared numbering but only the branch head moves; MAIN's hint never
     does, so readers see nothing until ``fast_forward_table`` publishes
-    the branch (the spark.wap.branch staging flow at the manifest
-    layer, the twin of writers.versioned_write(branch=...))."""
+    the branch (the spark.wap.branch staging flow)."""
     import shutil
 
     spark = df.sparkSession
@@ -1003,7 +992,7 @@ def append_table(
     # table is O(new files) driver-side, never O(#files)
     prev = _manifest_for_write(table_dir, branch)
     cur = _current_names(prev)
-    if cur is not None and set(df.columns) != set(cur.values()):
+    if set(df.columns) != set(cur.values()):
         raise ValueError(
             f"append columns {sorted(df.columns)} != current schema "
             f"{sorted(cur.values())}"
@@ -1081,7 +1070,7 @@ def add_files(spark: SparkSession, table_dir: str, src_subdir: str) -> int:
         raise ValueError("add_files imports a subdirectory OF the table dir")
     df = spark.read.parquet(src)
     cur = _current_names(man)
-    if cur is not None and set(df.columns) != set(cur.values()):
+    if set(df.columns) != set(cur.values()):
         raise ValueError(
             f"imported columns {sorted(df.columns)} != current schema "
             f"{sorted(cur.values())}"
@@ -1091,19 +1080,17 @@ def add_files(spark: SparkSession, table_dir: str, src_subdir: str) -> int:
     # silently, and its stat encoders (derived from the imported df) could
     # disagree with man['stats_types'], encoding bounds in one domain and
     # decoding them in another (mis-planned scans or decode failures).
-    sch = man.get("schema")
-    if sch is not None:
-        expected = {f["name"]: f["type"] for f in sch["fields"]}
-        bad = {
-            c: (t, expected[c])
-            for c, t in df.dtypes
-            if c in expected and t != expected[c]
-        }
-        if bad:
-            raise ValueError(
-                "imported column types differ from the table schema: "
-                + ", ".join(f"{c} is {t!r}, expected {x!r}" for c, (t, x) in sorted(bad.items()))
-            )
+    expected = {f["name"]: f["type"] for f in man["schema"]["fields"]}
+    bad = {
+        c: (t, expected[c])
+        for c, t in df.dtypes
+        if c in expected and t != expected[c]
+    }
+    if bad:
+        raise ValueError(
+            "imported column types differ from the table schema: "
+            + ", ".join(f"{c} is {t!r}, expected {x!r}" for c, (t, x) in sorted(bad.items()))
+        )
     for c, want in man["stats_types"].items():
         got = _stat_type(df, c)
         if got != want:
@@ -1234,9 +1221,7 @@ def add_column(table_dir: str, name: str, dtype: str) -> int:
     """Metadata-only schema evolution: a new field id; zero files touched.
     Pre-evolution files read the column as typed NULL backfill."""
     man = read_manifest(table_dir)
-    sch = man.get("schema")
-    if sch is None:
-        raise ValueError("table predates schema tracking; cannot evolve")
+    sch = man["schema"]
     if any(f["name"] == name for f in sch["fields"]):
         raise ValueError(f"column {name!r} already exists")
     sch["fields"].append({"id": sch["next_id"], "name": name, "type": dtype})
@@ -1256,13 +1241,11 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     the key column of a LIVE equality delete is refused (the delete
     file's key resolution is pinned to its written name)."""
     man = read_manifest(table_dir)
-    sch = man.get("schema")
-    if sch is None:
-        raise ValueError("table predates schema tracking; cannot evolve")
+    sch = man["schema"]
     if any(f["name"] == new for f in sch["fields"]):
         raise ValueError(f"column {new!r} already exists")
     if any(
-        e.get("kind") == "eqdelete" and old in _entry_key_cols(e)
+        e.get("kind") == "eqdelete" and old in e["key_cols"]
         for e in man["entries"]
     ):
         raise ValueError(
@@ -1310,9 +1293,7 @@ def evolve_stats_spec(table_dir: str, stats_cols: list[str]) -> int:
     how Iceberg serves a table across partition specs, old partitions
     unpruned until rewritten."""
     man = read_manifest(table_dir)
-    sch = man.get("schema")
-    if sch is None:
-        raise ValueError("table predates schema tracking; cannot evolve")
+    sch = man["schema"]
     types = {f["name"]: f["type"] for f in sch["fields"]}
     missing = [c for c in stats_cols if c not in types]
     if missing:
@@ -1330,9 +1311,7 @@ def drop_column(table_dir: str, name: str) -> int:
     projection; file bytes are reclaimed only when rewrites happen
     (Iceberg's rule). Planning columns (stats) cannot be dropped."""
     man = read_manifest(table_dir)
-    sch = man.get("schema")
-    if sch is None:
-        raise ValueError("table predates schema tracking; cannot evolve")
+    sch = man["schema"]
     if name in man["stats_types"]:
         raise ValueError(f"{name!r} is a stats/planning column; cannot drop")
     if not any(f["name"] == name for f in sch["fields"]):
@@ -1432,20 +1411,14 @@ def _header_path(table_dir: str, version: int) -> str:
 
 def read_manifest_header(table_dir: str, version: int | None = None) -> dict:
     """The manifest WITHOUT its entry list — schema, names_at_seq,
-    stats_types, parent: everything the read path needs for schema
-    resolution, at O(schema) size. Written alongside the parquet
-    manifest table by ``write_manifest_parquet``, so the two-level read
-    path never parses the O(#files) JSON manifest; falls back to
-    stripping the full manifest when no sidecar exists yet (cold path,
-    paid once per version)."""
+    stats_types, parent, n_entries, form: everything the read path needs
+    for schema resolution and dispatch, at O(schema) size. Every commit
+    writes it, so the two-level read path never parses the O(#files)
+    JSON manifest."""
     if version is None:
         version = current_manifest_version(table_dir)
-    try:
-        with open(_header_path(table_dir, version)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        man = read_manifest(table_dir, version)
-        return {k: v for k, v in man.items() if k != "entries"}
+    with open(_header_path(table_dir, version)) as f:
+        return json.load(f)
 
 
 def write_manifest_parquet(
@@ -1455,11 +1428,13 @@ def write_manifest_parquet(
     the first half of two-level planning (VERDICT r10 item 4): real
     formats scale scan planning past millions of files by storing
     manifests as data (manifest list → manifest files) and pruning them
-    with a JOB instead of a driver loop. On this fallback the JSON
-    manifest is converted once per version (idempotent — the dir is
-    keyed by the immutable manifest number; a real format writes these
-    at commit time, so the conversion cost is a fallback artifact, not
-    part of the model) and ``plan_scan_spark`` plans against it.
+    with a JOB instead of a driver loop. On this fallback the table is
+    built once per version (idempotent — the dir is keyed by the
+    immutable manifest number; a real format writes these at commit
+    time, so the conversion cost is a fallback artifact, not part of the
+    model) and ``plan_scan_spark`` plans against it: from the
+    commit-time entry log for a full or external version, by a job over
+    the base's table for a delta.
 
     Schema: one row per entry with typed ``min_<c>`` / ``max_<c>`` /
     ``nulls_<c>`` per stats column — bounds re-enter the native domain
@@ -1471,73 +1446,53 @@ def write_manifest_parquet(
     out = manifest_parquet_dir(table_dir, version)
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
+    form, base = _manifest_form(table_dir, version)
+    if form == "delta":
+        # r14 delta composition: base parquet manifest table
+        # (recursively materialized — recursion bounded by
+        # MANIFEST_DELTA_MAX_CHAIN) anti-joined with the removed ids
+        # and unioned with the added entries, entirely as a job —
+        # the driver touches only the O(delta) delta record
+        return _write_manifest_parquet_delta(spark, table_dir, version, base, out)
+    hdr = read_manifest_header(table_dir, version)
+    # the commit already streamed the flat entry log, so the conversion
+    # is a pure Spark job — schema'd JSON scan, typed casts in
+    # executors, zero driver-side entry materialization
     jsonl = _entries_jsonl_path(table_dir, version)
-    if not os.path.exists(jsonl):
-        form, base = _manifest_form(table_dir, version)
-        if form == "delta":
-            # r14 delta composition: base parquet manifest table
-            # (recursively materialized — recursion bounded by
-            # MANIFEST_DELTA_MAX_CHAIN) anti-joined with the removed ids
-            # and unioned with the added entries, entirely as a job —
-            # the driver touches only the O(delta) delta record
-            return _write_manifest_parquet_delta(spark, table_dir, version, base, out)
-    if os.path.exists(jsonl):
-        # r12 path: the commit already streamed the flat entry log, so
-        # the conversion is a pure Spark job — schema'd JSON scan, typed
-        # casts in executors, zero driver-side entry materialization
-        # (VERDICT r11 'what's wrong' #2 closed)
-        hdr = read_manifest_header(table_dir, version)
-        stats_cols = list(hdr["stats_types"])
-        raw_t = {"date": "string", "long": "long", "double": "double", "string": "string"}
-        fields = [
-            "path string", "kind string", "seq long", "n_rows long",
-            "n_bytes long", "key_cols string", "target string", "bucket long",
-        ]
-        for c in stats_cols:
-            t = raw_t[hdr["stats_types"][c]]
-            fields += [f"min_{c} {t}", f"max_{c} {t}", f"nulls_{c} long"]
-        df = spark.read.json(jsonl, schema=", ".join(fields))
-        sel = [
-            F.col(c)
-            for c in (
-                "path", "kind", "seq", "n_rows", "n_bytes", "key_cols",
-                "target", "bucket",
-            )
-        ]
-        for c in stats_cols:
-            if hdr["stats_types"][c] == "date":
-                sel += [
-                    F.to_date(f"min_{c}").alias(f"min_{c}"),
-                    F.to_date(f"max_{c}").alias(f"max_{c}"),
-                ]
-            else:
-                sel += [F.col(f"min_{c}"), F.col(f"max_{c}")]
-            sel.append(F.col(f"nulls_{c}"))
-        n_approx = max(1, os.path.getsize(jsonl) // 160)
-        df.select(*sel).coalesce(
-            max(1, n_approx // 65536 + (1 if n_approx % 65536 else 0))
-        ).write.mode("overwrite").parquet(out)
-        return out
-    # legacy path (pre-r12 manifests, no commit-time entry log): convert
-    # the parsed JSON entries driver-side, once per immutable version
-    man = read_manifest(table_dir, version)
-    # header sidecar: the manifest minus entries (O(schema) bytes) —
-    # what read_manifest_header serves so the job-path READ never
-    # parses the O(#files) JSON either
-    hp = _header_path(table_dir, version)
-    if not os.path.exists(hp):
-        tmp = f"{hp}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({k: v for k, v in man.items() if k != "entries"}, f)
-        os.replace(tmp, hp)
-    rows, fields = _entry_rows_fields(man["entries"], man["stats_types"])
-    df = spark.createDataFrame(rows, ", ".join(fields))
+    stats_cols = list(hdr["stats_types"])
+    raw_t = {"date": "string", "long": "long", "double": "double", "string": "string"}
+    fields = [
+        "path string", "kind string", "seq long", "n_rows long",
+        "n_bytes long", "key_cols string", "target string", "bucket long",
+    ]
+    for c in stats_cols:
+        t = raw_t[hdr["stats_types"][c]]
+        fields += [f"min_{c} {t}", f"max_{c} {t}", f"nulls_{c} long"]
+    df = spark.read.json(jsonl, schema=", ".join(fields))
+    sel = [
+        F.col(c)
+        for c in (
+            "path", "kind", "seq", "n_rows", "n_bytes", "key_cols",
+            "target", "bucket",
+        )
+    ]
+    for c in stats_cols:
+        if hdr["stats_types"][c] == "date":
+            sel += [
+                F.to_date(f"min_{c}").alias(f"min_{c}"),
+                F.to_date(f"max_{c}").alias(f"max_{c}"),
+            ]
+        else:
+            sel += [F.col(f"min_{c}"), F.col(f"max_{c}")]
+        sel.append(F.col(f"nulls_{c}"))
     # one shard per ~64k entries: a million-file manifest stays a few
     # parquet files, each independently prunable by its own row groups
-    df.coalesce(max(1, len(rows) // 65536 + (1 if len(rows) % 65536 else 0))).write.mode(
-        "overwrite"
-    ).parquet(out)
+    df.select(*sel).coalesce(_manifest_shards(hdr)).write.mode("overwrite").parquet(out)
     return out
+
+
+def _manifest_shards(hdr: dict) -> int:
+    return max(1, -(-hdr["n_entries"] // 65536))
 
 
 def _entry_rows_fields(
@@ -1545,8 +1500,7 @@ def _entry_rows_fields(
 ) -> tuple[list[tuple], list[str]]:
     """Entry dicts → (rows, DDL fields) for the parquet manifest table —
     bounds decoded to the native domain so pruning predicates are plain
-    typed comparisons. Shared by the legacy full conversion and the
-    delta composition's added side."""
+    typed comparisons — the added side of a delta version's table."""
     stats_cols = list(stats_types)
     decs = {c: _STAT_DECODERS[stats_types[c]] for c in stats_cols}
     sql_t = {"date": "date", "long": "long", "double": "double", "string": "string"}
@@ -1567,7 +1521,7 @@ def _entry_rows_fields(
             e.get("seq", 0),
             e["rows"],
             e["bytes"],
-            json.dumps(_entry_key_cols(e)) if e.get("kind") == "eqdelete" else None,
+            json.dumps(e["key_cols"]) if e.get("kind") == "eqdelete" else None,
             e.get("target"),
             e.get("bucket"),
         ]
@@ -1594,11 +1548,6 @@ def _write_manifest_parquet_delta(
     d = _load_manifest_raw(table_dir, version)["delta"]
     hdr = read_manifest_header(table_dir, version)
     base_df = spark.read.parquet(base_dir)
-    # normalize optional columns absent from tables materialized by
-    # older code (pre-r12 lacked target/key_cols; pre-r14 lacked bucket)
-    for c, t in (("key_cols", "string"), ("target", "string"), ("bucket", "long")):
-        if c not in base_df.columns:
-            base_df = base_df.withColumn(c, F.lit(None).cast(t))
     if d["removed"]:
         rem = spark.createDataFrame(
             [(p, t if t is not None else "") for p, t in (tuple(r) for r in d["removed"])],
@@ -1616,10 +1565,7 @@ def _write_manifest_parquet_delta(
             spark.createDataFrame(rows, ", ".join(fields)),
             allowMissingColumns=True,
         )
-    n_approx = max(1, hdr.get("n_entries") or 1)
-    base_df.coalesce(
-        max(1, n_approx // 65536 + (1 if n_approx % 65536 else 0))
-    ).write.mode("overwrite").parquet(out)
+    base_df.coalesce(_manifest_shards(hdr)).write.mode("overwrite").parquet(out)
     return out
 
 
@@ -1719,11 +1665,6 @@ def _spark_plan_finish(table_dir: str, mt: DataFrame, cond: Column, verb: str) -
 #: ever materialized on the warm path).
 PLAN_SPARK_THRESHOLD = 200_000
 
-#: JSON manifest bytes per entry (indent=1 encoding, path + bounds +
-#: null counts) — the dispatch heuristic's divisor, so deciding which
-#: planner to use never itself parses the large manifest
-_MANIFEST_BYTES_PER_ENTRY = 220
-
 
 def plan_scan_box_spark(spark: SparkSession, table_dir: str, preds: dict) -> dict:
     """Multi-column (box) zone-map planning as a Spark job — the
@@ -1748,21 +1689,17 @@ def plan_scan_box_spark(spark: SparkSession, table_dir: str, preds: dict) -> dic
 def _over_plan_threshold(
     table_dir: str, threshold: int | None, version: int | None = None
 ) -> bool:
-    """The dispatch probe: manifest FILE size over a bytes/entry
-    approximation — parsing the JSON to count entries would pay exactly
-    the cost the dispatch exists to avoid. ``threshold=None`` reads the
-    module-level PLAN_SPARK_THRESHOLD at call time (monkeypatchable —
-    the routing pin in test_filetable forces the job path this way)."""
+    """The dispatch probe: the version's entry count from its O(schema)
+    header (``n_entries``, recorded by every commit) — parsing the JSON
+    to count entries would pay exactly the cost the dispatch exists to
+    avoid. ``threshold=None`` reads the module-level
+    PLAN_SPARK_THRESHOLD at call time (monkeypatchable — the routing pin
+    in test_filetable forces the job path this way)."""
     if threshold is None:
         threshold = PLAN_SPARK_THRESHOLD
     if version is None:
         version = current_manifest_version(table_dir)
-    # r14: delta manifests are O(delta) bytes, so file size no longer
-    # approximates the entry count — every r14 commit records n_entries
-    # in its O(schema) header; the byte heuristic remains the legacy
-    # fallback (correct for inline-full manifests, which are the only
-    # kind without the field)
-    return _n_entries_approx(table_dir, version) > threshold
+    return read_manifest_header(table_dir, version)["n_entries"] > threshold
 
 
 def _manifest_auto(
@@ -1775,20 +1712,13 @@ def _manifest_auto(
     read never parses the JSON manifest. The path list itself is
     necessarily O(#files) on the driver (spark.read.parquet takes
     paths); what the job path removes is the 100×-wider JSON
-    parse-and-hold. Falls back to the JSON manifest for manifest tables
-    materialized before the narrow columns existed."""
+    parse-and-hold."""
     if version is None:
         version = current_manifest_version(table_dir)
     if not _over_plan_threshold(table_dir, None, version):
         return read_manifest(table_dir, version)
-    pdir = write_manifest_parquet(spark, table_dir, version)
-    mt = spark.read.parquet(pdir)
-    if "target" not in mt.columns:
-        return read_manifest(table_dir, version)  # pre-r12 materialization
-    cols = ["path", "kind", "seq", "n_rows", "n_bytes", "key_cols", "target"]
-    has_bucket = "bucket" in mt.columns  # pre-r14 tables lack the column
-    if has_bucket:
-        cols.append("bucket")
+    mt = spark.read.parquet(write_manifest_parquet(spark, table_dir, version))
+    cols = ["path", "kind", "seq", "n_rows", "n_bytes", "key_cols", "target", "bucket"]
     entries = [
         {
             "path": r["path"],
@@ -1798,11 +1728,7 @@ def _manifest_auto(
             "bytes": r["n_bytes"],
             **({"key_cols": json.loads(r["key_cols"])} if r["key_cols"] else {}),
             **({"target": r["target"]} if r["target"] is not None else {}),
-            **(
-                {"bucket": r["bucket"]}
-                if has_bucket and r["bucket"] is not None
-                else {}
-            ),
+            **({"bucket": r["bucket"]} if r["bucket"] is not None else {}),
         }
         for r in mt.select(*cols).collect()
     ]
@@ -1916,10 +1842,7 @@ def _mt_entries(
     back into a manifest — added entries always come fresh from
     ``_collect_entries``."""
     mt = spark.read.parquet(write_manifest_parquet(spark, table_dir, version))
-    cols = ["path", "kind", "seq", "n_rows", "n_bytes", "key_cols", "target"]
-    has_bucket = "bucket" in mt.columns
-    if has_bucket:
-        cols.append("bucket")
+    cols = ["path", "kind", "seq", "n_rows", "n_bytes", "key_cols", "target", "bucket"]
     out = []
     for r in mt.filter(cond).select(*cols).collect():
         e = {
@@ -1936,7 +1859,7 @@ def _mt_entries(
             e["key_cols"] = json.loads(r["key_cols"])
         if r["target"] is not None:
             e["target"] = r["target"]
-        if has_bucket and r["bucket"] is not None:
+        if r["bucket"] is not None:
             e["bucket"] = r["bucket"]
         out.append(e)
     out.sort(key=lambda e: (e["path"], e.get("target") or ""))
@@ -1953,21 +1876,17 @@ def _split_entries(
     return data, eqs, poss, dvs
 
 
-def _current_names(man: dict) -> dict[str, str] | None:
-    sch = man.get("schema")
-    if sch is None:
-        return None
-    return {str(f["id"]): f["name"] for f in sch["fields"]}
+def _current_names(man: dict) -> dict[str, str]:
+    return {str(f["id"]): f["name"] for f in man["schema"]["fields"]}
 
 
 def _inherit_schema(prev: dict, manifest: dict, *, adds_files: bool) -> dict:
     """Carry the evolution bookkeeping through a commit; commits that add
     files stamp the CURRENT written names for their (CAS-resolved) seq."""
-    if "schema" in prev:
-        manifest["schema"] = prev["schema"]
-        manifest["names_at_seq"] = dict(prev.get("names_at_seq", {}))
-        if adds_files:
-            manifest["_new_names"] = _current_names(prev)
+    manifest["schema"] = prev["schema"]
+    manifest["names_at_seq"] = dict(prev.get("names_at_seq", {}))
+    if adds_files:
+        manifest["_new_names"] = _current_names(prev)
     if "layout" in prev:
         manifest["layout"] = prev["layout"]
     return manifest
@@ -1979,9 +1898,7 @@ def _projection_for_seq(man: dict, seq: int):
     fields that didn't exist yet backfill as typed NULLs; columns since
     dropped are simply not selected. Returns None when the stored names
     at ``seq`` already equal the current schema (identity projection)."""
-    sch = man.get("schema")
-    if sch is None:
-        return None
+    sch = man["schema"]
     written = man.get("names_at_seq", {}).get(str(seq), {})
     exprs, identity = [], True
     for f in sch["fields"]:
@@ -2048,12 +1965,8 @@ def _read_data(spark: SparkSession, table_dir: str, man: dict, data: list[dict],
     if out is None:
         # zero live data files (e.g. a DELETE that covered every file):
         # an empty frame with the CURRENT schema keeps downstream plans
-        # valid — including any requested helper columns; tables
-        # predating schema tracking cannot reconstruct one
-        sch = man.get("schema")
-        if sch is None:
-            raise ValueError("empty snapshot on a table without a schema record")
-        cols = [f"{f['name']} {f['type']}" for f in sch["fields"]]
+        # valid — including any requested helper columns
+        cols = [f"{f['name']} {f['type']}" for f in man["schema"]["fields"]]
         if meta_cols:
             cols += ["_ft_file string", "_ft_pos long"]
         if seq_col is not None:
@@ -2097,17 +2010,10 @@ def read_table(
     return _mor_read(spark, table_dir, man, keep_meta=False)
 
 
-def _entry_key_cols(e: dict) -> list[str]:
-    """An equality-delete entry's key columns — ``key_cols`` (multi-col,
-    r11: Iceberg v2's equality_ids may name several fields) with the
-    pre-r11 single ``key_col`` as the legacy spelling."""
-    return e.get("key_cols") or [e["key_col"]]
-
-
 def _eq_keys_frame(spark: SparkSession, table_dir: str, eqs: list[dict]) -> DataFrame:
     dk = None
     for e in eqs:
-        cols = _entry_key_cols(e)
+        cols = e["key_cols"]
         part = (
             spark.read.parquet(os.path.join(table_dir, e["path"]))
             .select(
@@ -2125,7 +2031,7 @@ def _pos_frame(spark: SparkSession, table_dir: str, poss: list[dict]) -> DataFra
 
 
 def _eq_key_cols(eqs: list[dict]) -> list[str]:
-    key_sets = {tuple(_entry_key_cols(e)) for e in eqs}
+    key_sets = {tuple(e["key_cols"]) for e in eqs}
     if len(key_sets) != 1:
         raise ValueError(
             f"mixed equality-delete key columns: {sorted(key_sets)}"
@@ -4055,21 +3961,15 @@ METADATA_OPERATIONS = frozenset(
 )
 
 
-def _live_delete_kinds(man: dict) -> list[str]:
-    return sorted(
-        {e["kind"] for e in man["entries"] if e.get("kind", "data") != "data"}
-    )
-
-
 def _data_paths_and_kinds_at(
     table_dir: str, version: int
 ) -> tuple[set[str], list[str]]:
     """(live data-path set, live delete kinds) at a version WITHOUT
     composing the full entry list: the delta chain is walked to its full
     ancestor, whose state streams in (entry log line-at-a-time for
-    external-full; the inline JSON parse for legacy full manifests —
-    those predate the delta format and are the bootstrap-size answer
-    anyway), then the chain's removed/added apply as set arithmetic.
+    external-full; the inline JSON parse for an inline-full manifest —
+    written only under the planning threshold, so it is the
+    bootstrap-size answer anyway), then the chain's removed/added apply as set arithmetic.
     Peak memory is the returned path set plus the live delete-entry ids
     — both answer-scale. A removed id with a None target may be a DATA
     file or an eq/pos delete FILE (fold delta-commits since r14); the
@@ -4143,8 +4043,7 @@ def incremental_feed(
     The walk follows each manifest's ``parent`` pointer back from the
     current version (robust to expiry gaps and to branch commits
     interleaved in the shared manifest numbering); the chain's oldest
-    REACHABLE manifest — parent expired or predating parent tracking —
-    is the bootstrap.
+    REACHABLE manifest — its parent expired — is the bootstrap.
 
     CHECKPOINTED RESUME: ``since_version`` is the consumer's checkpoint
     (the last version it fully ingested). The feed then contains only
@@ -4176,8 +4075,8 @@ def incremental_feed(
     if bootstrap not in ("files", "visible"):
         raise ValueError(f"bootstrap must be 'files' or 'visible', got {bootstrap!r}")
     # r14 (VERDICT r13 item 1): the walk loads RAW manifests — O(delta)
-    # bytes for every delta/external commit; only legacy inline-full
-    # manifests (which predate the delta format) parse their entries
+    # bytes for every delta/external commit; only inline-full manifests
+    # (written under the planning threshold) parse their entries
     chain: list[dict] = []
     v: int | None = current_manifest_version(table_dir)
     while v is not None:
@@ -4289,8 +4188,8 @@ def incremental_feed(
             if prev_paths is not None:
                 prev_paths = (prev_paths - set(removed_data)) | set(added_data)
         else:
-            # legacy inline-full commit: the classic diff (its parse IS
-            # the under-threshold regime)
+            # inline-full commit: the classic diff (its parse IS the
+            # under-threshold regime)
             data_paths = [
                 e["path"]
                 for e in man["entries"]
@@ -4336,19 +4235,20 @@ def _delta_records_between(
     table_dir: str, v_from: int, v_to: int
 ) -> list[dict] | None:
     """The commit delta records composing v_from → v_to, oldest first —
-    or None when the range isn't fully delta-recorded (a legacy
-    inline-full commit in between, or v_from not on v_to's base chain).
-    O(schema) header reads per link; only the O(delta) records load."""
+    or None when the range isn't fully delta-recorded (an inline-full
+    commit in between, a link expired, or v_from not on v_to's base
+    chain). O(schema) header reads per link; only the O(delta) records
+    load."""
     recs: list[dict] = []
     v = v_to
     while v != v_from:
-        form, base = _manifest_form(table_dir, v)
-        if form == "full" or base is None or base < v_from:
-            return None
         try:
+            form, base = _manifest_form(table_dir, v)
+            if form == "full" or base < v_from:
+                return None
             recs.append(_load_manifest_raw(table_dir, v)["delta"])
-        except (FileNotFoundError, KeyError):
-            return None
+        except FileNotFoundError:
+            return None  # an expired link: the chain no longer covers it
         v = base
     recs.reverse()
     return recs
@@ -4490,8 +4390,7 @@ def plan_changelog(
     append-only range therefore reads just the appended files (Iceberg's
     incremental scan); a delete/merge/compact range reads the rewritten
     straddlers and their replacements, still never the untouched bulk.
-    The two-full-scan exceptAll (writers.changelog_between_versions, the
-    versioned-copy protocol's honest cost) remains the FALLBACK when the
+    A two-full-scan exceptAll remains the FALLBACK when the
     identity doesn't apply: live MOR delete files make visibility differ
     from data files, so ``mode="full"`` diffs the MOR reads instead.
     A schema change between the versions raises — a changelog across
@@ -4501,7 +4400,7 @@ def plan_changelog(
     delta-recorded commits plans from the COMMIT RECORDS — the net
     (removed, added) composes in O(sum of deltas), removed/changed entry
     dicts come from the parquet manifest tables (a bounded job), and no
-    version's full entry list is ever composed driver-side. A legacy
+    version's full entry list is ever composed driver-side. An
     inline-full commit inside the range falls back to the manifest diff
     below (those manifests are under-threshold by construction)."""
     if spark is not None:
@@ -4837,19 +4736,12 @@ def _branches_path(table_dir: str) -> str:
 def _read_branches(table_dir: str) -> dict:
     """Branch records: ``{name: {"head": v, "base": b}}`` where ``base``
     is the version the branch diverged from (the ancestry anchor
-    fast_forward_table checks). The pre-r11 format stored a bare head
-    int; it normalizes with base = head — the weakest sound assumption
-    (such a branch fast-forwards only if main still sits at that exact
-    version or the parent chain proves ancestry)."""
+    fast_forward_table checks)."""
     try:
         with open(_branches_path(table_dir)) as f:
-            raw = json.load(f)
+            return json.load(f)
     except FileNotFoundError:
         return {}
-    return {
-        k: (dict(v) if isinstance(v, dict) else {"head": v, "base": v})
-        for k, v in raw.items()
-    }
 
 
 def _write_branches(table_dir: str, branches: dict) -> None:
@@ -4871,8 +4763,8 @@ def branch_head(table_dir: str, branch: str | None) -> int | None:
 
 
 def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
-    """Named branch ref starting at ``version`` (default: current main) —
-    the manifest-layer twin of writers.create_branch; commits with
+    """Named branch ref starting at ``version`` (default: current main)
+    — Iceberg's ``CREATE BRANCH``; commits with
     ``append_table(branch=...)`` move only this head. The branch records
     its BASE (the version it diverged from) so fast_forward_table can
     refuse a publish that would discard a later main commit. Runs under
@@ -4902,13 +4794,12 @@ def drop_branch(table_dir: str, name: str) -> None:
 
 def fast_forward_table(table_dir: str, branch: str) -> int:
     """Publish a branch head to MAIN in one atomic hint replace — the
-    WAP publish step (Iceberg's fast_forward procedure; the executed
-    twin also lives in writers.fast_forward for the versioned protocol).
+    WAP publish step (Iceberg's fast_forward procedure).
 
     ANCESTRY GATE (ADVICE r10): publishing is refused unless main's
     current version is an ancestor of the branch head — walked over the
     ``parent`` pointers every commit records, with the branch's recorded
-    base as the fallback for pre-parent-tracking manifests. Without the
+    base as the fallback when expiry truncated the chain. Without the
     gate, a main commit that landed after the branch diverged would be
     silently discarded (a lost update — Iceberg's fast_forward errors on
     exactly this). Runs entirely under the commit lock so no commit can
@@ -4932,8 +4823,8 @@ def fast_forward_table(table_dir: str, branch: str) -> int:
             try:
                 v = read_manifest(table_dir, v).get("parent")
             except FileNotFoundError:
-                break  # chain truncated by expiry / pre-parent manifests
-        if not is_ancestor and cur_main != rec.get("base"):
+                break  # chain truncated by expiry
+        if not is_ancestor and cur_main != rec["base"]:
             raise CommitConflictError(
                 f"cannot fast-forward branch {branch!r}: main is at "
                 f"{cur_main}, which is not an ancestor of the branch head "
@@ -4952,8 +4843,8 @@ def fast_forward_table(table_dir: str, branch: str) -> int:
 
 
 def tag_snapshot(table_dir: str, name: str, version: int | None = None) -> int:
-    """Immutable named tag on a manifest version (Iceberg tag refs, the
-    manifest-layer twin of writers.create_tag): re-tagging an existing
+    """Immutable named tag on a manifest version (Iceberg tag refs):
+    re-tagging an existing
     name raises; ``expire_table`` keeps every tagged version alive
     (per-ref retention)."""
     if version is None:
@@ -5339,19 +5230,13 @@ def _referenced_paths_spark(
     distributed ``distinct``, and only the deduplicated path set comes
     back — the driver never parses a retained version's O(#files) JSON
     manifest. Delta versions have no full log and need none: their
-    O(delta) added paths union in driver-side (``_delta_union_split``).
-    Full versions predating the entry log get one written from their
-    JSON manifest (once, idempotent — legacy cold path). The returned
+    O(delta) added paths union in driver-side (``_delta_union_split``);
+    every full or external version has its log. The returned
     set is O(#live files) paths on the driver, the same bound
     ``_manifest_auto``'s path list already has (the walk comparison
     needs it; a real deploy would anti-join the listing as a job too)."""
     full, referenced = _delta_union_split(table_dir, versions)
-    logs = []
-    for v in full:
-        p = _entries_jsonl_path(table_dir, v)
-        if not os.path.exists(p):
-            _write_entries_jsonl(table_dir, read_manifest(table_dir, v), v)
-        logs.append(p)
+    logs = [_entries_jsonl_path(table_dir, v) for v in full]
     if logs:
         df = spark.read.json(logs, schema="path string")
         referenced |= {r["path"] for r in df.select("path").distinct().collect()}
@@ -5362,14 +5247,12 @@ def _referenced_paths_auto(
     spark: SparkSession | None, table_dir: str, versions: list[int]
 ) -> set[str]:
     """Two-level dispatch for the reference-set union: under the
-    threshold (summed manifest bytes / bytes-per-entry, the
-    ``_over_plan_threshold`` heuristic across ALL retained versions) the
-    driver loop; past it — and given a session — the Spark job."""
+    threshold (the headers' ``n_entries`` summed across ALL retained
+    versions) the driver loop; past it — and given a session — the
+    Spark job."""
     if spark is not None:
-        # n_entries-based since r14 (delta manifests are tiny on disk,
-        # so file size stopped approximating the union's work)
-        approx = sum(_n_entries_approx(table_dir, v) for v in versions)
-        if approx > PLAN_SPARK_THRESHOLD:
+        n = sum(read_manifest_header(table_dir, v)["n_entries"] for v in versions)
+        if n > PLAN_SPARK_THRESHOLD:
             return _referenced_paths_spark(spark, table_dir, versions)
     return _referenced_paths_driver(table_dir, versions)
 
@@ -5547,8 +5430,9 @@ def expire_table(
     table_dir: str, *, keep_last: int = 1, spark: SparkSession | None = None
 ) -> dict:
     """Retention: drop all but the newest ``keep_last`` manifests (always
-    keeping the current one AND every tagged version — per-ref retention,
-    like writers.expire_versions), then reclaim data files referenced by
+    keeping the current one AND every tagged version and branch head and
+    base — per-ref retention, Iceberg's ``retain_last`` plus ref
+    retention), then reclaim data files referenced by
     NO surviving manifest — Iceberg's expire_snapshots + orphan cleanup
     at the data-file grain. The surviving-reference union dispatches
     through ``_referenced_paths_auto`` (VERDICT r12 item 4): past the

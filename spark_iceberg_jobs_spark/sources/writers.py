@@ -3,13 +3,10 @@
 The reference writes with ``df.write.mode("overwrite").saveAsTable(...)``
 (job1:295,305,315,325,335) — on a v2 catalog that is a *replace table* which
 clobbers the DDL-declared schema/partition spec with the DataFrame's inferred
-one (SURVEY.md §1.3). This engine writes either:
-
-- ``writeTo(...)`` (DataFrameWriterV2) against an Iceberg catalog when the
-  runtime is present — ``overwritePartitions`` / ``append`` respect the
-  declared spec; or
-- plain parquet / Hive-style bucketed tables otherwise (this container has no
-  Iceberg jar; TESTDATA parity never depends on it).
+one (SURVEY.md §1.3). This module keeps two plain sinks: format-generic
+files (``write_table``) and a Hive-style bucketed table
+(``write_bucketed_table``). Versioned snapshot tables — commits, branches,
+tags, audited appends, time travel — live in ``sources/filetable.py``.
 
 Scale notes: bucketed writes co-locate join keys so repeated fact-fact joins
 on the bucket key run with **no shuffle Exchange** (the point of the
@@ -22,26 +19,6 @@ At 100 TB you would also size files via ``write.targetFileSize`` (Iceberg) or
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    sort_within_partitions: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Parquet sink with optional layout tuning (README.md:24-25)."""
-    if sort_within_partitions:
-        df = df.sortWithinPartitions(*sort_within_partitions)
-    w = df.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_table(
@@ -82,550 +59,3 @@ def write_bucketed_table(
     w = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_cols)
     w = w.sortBy(*(sort_cols or bucket_cols))
     w.saveAsTable(table)
-
-
-def overwrite_iceberg(df: DataFrame, table: str, *, create: bool = False) -> None:
-    """DataFrameWriterV2 path for Iceberg catalogs (fixes the §1.3 bug).
-
-    Default is the SAFE path: ``overwritePartitions`` against the
-    existing table, which preserves a pre-declared DDL schema/partition
-    spec. ``create=True`` opts in to ``createOrReplace``, which installs
-    the DataFrame-inferred schema — i.e. it re-introduces the §1.3
-    replace-table clobber on a DDL-declared table, so it must be the
-    explicit choice, never the default (review finding, r8: the default
-    was create=True, silently destroying a declared bucket spec).
-    Requires iceberg-spark-runtime on the classpath.
-    """
-    if create:
-        df.writeTo(table).createOrReplace()
-    else:
-        df.writeTo(table).overwritePartitions()
-
-
-def wap_write_parquet(
-    df: DataFrame,
-    final_dir: str,
-    *,
-    audits: list,
-    partition_by: list[str] | None = None,
-) -> str:
-    """Write-Audit-Publish (WAP) — the Iceberg branch-commit discipline on
-    the parquet fallback: the batch lands in a process-unique STAGING
-    directory, every audit runs against a reader OVER THE STAGED FILES
-    (never the in-memory frame — what was written is what is audited),
-    and only if all audits pass does the staging directory publish
-    atomically as the final table. A failed audit tears the staging down
-    and raises, so readers of ``final_dir`` can never observe a
-    half-written or audit-failing batch.
-
-    ``audits``: callables ``(DataFrame) -> bool | None``. ``None`` counts
-    as PASS (assert-style audits that raise on failure); ANY falsy
-    return fails — truth-tested, not ``is False`` (review finding, r8:
-    an audit written with pandas/numpy returns ``numpy.bool_(False)``,
-    which is not the ``False`` singleton, and the identity check would
-    have published the failing batch). Any exception fails loudly — an
-    audit that cannot run must not pass. Under Iceberg this exact flow
-    is ``spark.wap.branch`` + ``fast_forward``; the staging dir plays
-    the branch and the audit reader the branch scan.
-
-    Publish = functions/artifacts.swap_publish (shared with
-    compact_parquet): fresh targets one atomic rename; re-publish a
-    rename-aside swap with restore-on-failure and crash recovery of
-    stranded ``.swap_old`` dirs. Single-writer per table path, like any
-    path-based table without a catalog.
-
-    Returns the published path. Scale: one or two directory renames over
-    the plain write; audits cost whatever they scan — point them at
-    aggregates, not full-table collects.
-    """
-    import shutil
-
-    from ..functions.artifacts import staging_dir, swap_publish
-
-    staging = staging_dir(final_dir)
-    try:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
-        spark = df.sparkSession
-        staged = spark.read.parquet(staging)
-        for i, audit in enumerate(audits):
-            try:
-                ok = audit(staged)
-            except Exception as e:  # noqa: BLE001 - audit errors must FAIL the publish
-                raise ValueError(f"WAP audit #{i} errored: {e}") from e
-            if ok is not None and not ok:
-                raise ValueError(f"WAP audit #{i} failed; staging discarded")
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    swap_publish(staging, final_dir)
-    return final_dir
-
-
-# ---------------------------------------------------------------------------
-# Versioned table directory — the HadoopTables version-hint commit protocol
-# ---------------------------------------------------------------------------
-
-_VERSION_HINT = "version-hint.text"
-
-
-def _versions(table_dir: str) -> list[int]:
-    import os
-
-    try:
-        names = os.listdir(table_dir)
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("v") and n[1:].isdigit():
-            out.append(int(n[1:]))
-    return sorted(out)
-
-
-def current_version(table_dir: str) -> int | None:
-    """The committed version per the hint file, or None for an empty/
-    uninitialized table. A hint pointing at a missing version directory
-    raises — serving an arbitrary other version would be silent wrong
-    results."""
-    import os
-
-    hint = os.path.join(table_dir, _VERSION_HINT)
-    try:
-        with open(hint) as f:
-            v = int(f.read().strip())
-    except FileNotFoundError:
-        return None
-    if v not in _versions(table_dir):
-        raise ValueError(f"version hint {v} points at a missing directory in {table_dir!r}")
-    return v
-
-
-_COMMIT_MARKER = "_VERSION_COMMITTED"
-
-
-def _claim_version(table_dir: str) -> tuple[int, str]:
-    """Atomically CLAIM the next version number by creating its directory
-    with ``os.mkdir`` (O_EXCL semantics for directories) — the CAS that
-    makes two concurrent writers land in DISTINCT versions instead of
-    racing ``mode("overwrite")`` into the same v-dir (VERDICT r9 item 5).
-    On EEXIST the claim retries at n+1; versions are never reused while
-    their directory exists."""
-    import os
-
-    nxt = (_versions(table_dir) or [0])[-1] + 1
-    while True:
-        vdir = os.path.join(table_dir, f"v{nxt:06d}")
-        try:
-            os.mkdir(vdir)
-            return nxt, vdir
-        except FileExistsError:
-            nxt += 1
-
-
-def committed_versions(table_dir: str) -> list[int]:
-    """Versions whose directory carries the commit marker — i.e. whose
-    write fully completed AND whose audits passed. A crash-orphaned dir
-    (write done, audits/marker never ran) is excluded, so it can never
-    be served by rollback (ADVICE r9)."""
-    import os
-
-    return [
-        v
-        for v in _versions(table_dir)
-        if os.path.exists(os.path.join(table_dir, f"v{v:06d}", _COMMIT_MARKER))
-    ]
-
-
-def versioned_write(
-    df: DataFrame,
-    table_dir: str,
-    *,
-    audits: list | None = None,
-    branch: str | None = None,
-) -> int:
-    """Commit ``df`` as the table's next immutable version — Iceberg
-    HadoopTables' ``version-hint.text`` protocol on the parquet fallback,
-    the EXECUTED twin of maintenance_rollback_plan's planning model:
-
-    1. the writer CLAIMS a brand-new ``v{n}`` directory via an atomic
-       ``os.mkdir`` CAS (``n`` = one past the MAX existing version,
-       retried at n+1 on EEXIST) — two concurrent writers always land in
-       distinct versions; and versions are never reused, so a rollback
-       followed by a new commit branches forward exactly like Iceberg's
-       rollback_to_snapshot + append;
-    2. with ``audits``, every audit runs against a reader over the
-       UNREFERENCED version directory before the repoint — the dir IS
-       the WAP branch (readers cannot see it until the hint moves), so
-       write-audit-publish needs no separate staging here; semantics
-       match wap_write_parquet (``None`` = pass, any falsy return or any
-       exception fails and the version dir is torn down);
-    3. a ``_VERSION_COMMITTED`` marker lands in the version dir (the
-       "audits passed, contents final" stamp rollback_version trusts),
-       then the hint file repoints via write-tmp + ``os.replace`` —
-       atomic on POSIX, so a reader resolves either the old or the new
-       version, never a torn hint;
-    4. a crash before the marker leaves an UNCOMMITTED orphan no
-       rollback will ever serve; a crash between marker and repoint
-       leaves a committed-but-unreferenced version (a valid rollback /
-       roll-forward target — it passed its audits), and either way the
-       previous version stays current until ``expire_versions`` reclaims
-       the leftovers — the orphan-file story at the version grain.
-
-    Concurrency: version claims are CAS-serialized; the one remaining
-    last-writer-wins surface is the hint repoint itself, which
-    ``os.replace`` already makes atomic (concurrent committers resolve
-    to whichever repoint lands last — a real catalog turns that into a
-    conditional CAS commit and retries the loser). Returns the committed
-    version number.
-
-    ``branch``: commit onto a NAMED BRANCH instead of main — Iceberg's
-    ``spark.wap.branch`` staging flow: the version commits (marker and
-    all) and the branch ref moves to it, but MAIN'S hint never moves, so
-    readers of ``read_current_version`` see nothing until
-    ``fast_forward(table_dir, branch)`` publishes the branch head.
-    Post-hoc audits run against ``read_ref(..., "branch", branch)``."""
-    import os
-    import shutil
-
-    os.makedirs(table_dir, exist_ok=True)
-    nxt, vdir = _claim_version(table_dir)
-    try:
-        # append, not overwrite: the claimed dir is freshly empty, and
-        # overwrite would DELETE-then-recreate it — momentarily releasing
-        # the mkdir CAS so a concurrent claimant could land in the same
-        # version. Append writes part files without touching the dir.
-        df.write.mode("append").parquet(vdir)
-        if audits:
-            staged = df.sparkSession.read.parquet(vdir)
-            for i, audit in enumerate(audits):
-                try:
-                    ok = audit(staged)
-                except Exception as e:  # noqa: BLE001 — audit errors fail the commit
-                    raise ValueError(f"versioned-write audit #{i} errored: {e}") from e
-                if ok is not None and not ok:
-                    raise ValueError(
-                        f"versioned-write audit #{i} failed; version {nxt} discarded"
-                    )
-        # the commit stamp: written only after the data write and every
-        # audit succeeded, immediately before the repoint (ADVICE r9)
-        with open(os.path.join(vdir, _COMMIT_MARKER), "w") as f:
-            f.write(str(nxt))
-    except Exception:
-        shutil.rmtree(vdir, ignore_errors=True)
-        raise
-    if branch is None:
-        _repoint(table_dir, nxt)
-    else:
-        _write_ref(_ref_path(table_dir, "branch", branch), nxt, exclusive=False)
-    return nxt
-
-
-def _repoint(table_dir: str, version: int) -> None:
-    import os
-
-    hint = os.path.join(table_dir, _VERSION_HINT)
-    tmp = f"{hint}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, hint)  # atomic commit point
-
-
-def read_current_version(spark, table_dir: str) -> DataFrame:
-    """Read the committed version (hint-resolved), exactly what an
-    Iceberg reader does with version-hint.text."""
-    import os
-
-    v = current_version(table_dir)
-    if v is None:
-        raise ValueError(f"{table_dir!r} has no committed version")
-    return spark.read.parquet(os.path.join(table_dir, f"v{v:06d}"))
-
-
-def rollback_version(table_dir: str, to_version: int) -> int:
-    """Execute rollback_to_snapshot at the storage layer: repoint the
-    hint at an existing, COMMITTED earlier version (one atomic file
-    replace — no data moves, which is why rollback is free in a table
-    format). Targets that exist on disk but never committed — a
-    crash-orphaned dir whose write finished but whose audits/marker
-    never ran — are REJECTED, so unaudited data can never be served as
-    current (ADVICE r9). The rolled-back-over versions stay on disk,
-    still readable by explicit version until ``expire_versions``
-    reclaims them. Returns the version now current."""
-    if to_version not in _versions(table_dir):
-        raise ValueError(f"version {to_version} does not exist in {table_dir!r}")
-    if to_version not in committed_versions(table_dir):
-        raise ValueError(
-            f"version {to_version} in {table_dir!r} was never committed "
-            "(no commit marker — a torn or unaudited write); refusing to serve it"
-        )
-    _repoint(table_dir, to_version)
-    return to_version
-
-
-def expire_versions(table_dir: str, *, keep_last: int = 2) -> list[int]:
-    """Reclaim old version directories, always keeping the CURRENT one,
-    the newest ``keep_last``, and every version a tag or branch ref
-    still points at (per-ref retention — Iceberg's branch/tag-aware
-    ``expire_snapshots``) — a tagged audit snapshot survives any expiry
-    until the tag is dropped. Unreferenced crash leftovers older than
-    the kept set go too. Returns the versions removed."""
-    import os
-    import shutil
-
-    cur = current_version(table_dir)
-    vs = _versions(table_dir)
-    keep = set(vs[-keep_last:]) if keep_last > 0 else set()
-    if cur is not None:
-        keep.add(cur)
-    keep.update(list_refs(table_dir).values())
-    removed = []
-    for v in vs:
-        if v not in keep:
-            shutil.rmtree(os.path.join(table_dir, f"v{v:06d}"), ignore_errors=True)
-            removed.append(v)
-    return removed
-
-
-# ---------------------------------------------------------------------------
-# Named refs — Iceberg branch/tag semantics over the version protocol
-# ---------------------------------------------------------------------------
-
-_REFS_DIR = "refs"
-_REF_NAME_OK = r"^[A-Za-z0-9][A-Za-z0-9._-]*$"
-
-
-def _ref_path(table_dir: str, kind: str, name: str) -> str:
-    import os
-    import re
-
-    if kind not in ("tag", "branch"):
-        raise ValueError(f"unknown ref kind {kind!r}")
-    if not re.match(_REF_NAME_OK, name):
-        raise ValueError(f"invalid ref name {name!r}")
-    return os.path.join(table_dir, _REFS_DIR, f"{kind}.{name}")
-
-
-def _write_ref(path: str, version: int, *, exclusive: bool) -> None:
-    import os
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    if exclusive:
-        # O_EXCL: tag creation is a CAS — two racing creators cannot both
-        # win, matching Iceberg's "tags are immutable once created"
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(version))
-        return
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, path)  # atomic branch repoint
-
-
-def list_refs(table_dir: str) -> dict[str, int]:
-    """All named refs as ``{"tag.name"|"branch.name": version}``."""
-    import os
-
-    refs_dir = os.path.join(table_dir, _REFS_DIR)
-    try:
-        names = os.listdir(refs_dir)
-    except OSError:
-        return {}
-    out: dict[str, int] = {}
-    for n in names:
-        if not (n.startswith("tag.") or n.startswith("branch.")) or ".tmp." in n:
-            continue
-        try:
-            with open(os.path.join(refs_dir, n)) as f:
-                out[n] = int(f.read().strip())
-        except (OSError, ValueError):
-            continue
-    return out
-
-
-def create_tag(table_dir: str, name: str, version: int) -> int:
-    """Pin an immutable named ref at a COMMITTED version — Iceberg's
-    ``ALTER TABLE ... CREATE TAG``. Tags never move (creation is O_EXCL;
-    re-creating an existing tag raises) and ``expire_versions`` keeps
-    every tagged version alive until the tag is dropped."""
-    if version not in committed_versions(table_dir):
-        raise ValueError(
-            f"cannot tag version {version} in {table_dir!r}: not a committed version"
-        )
-    path = _ref_path(table_dir, "tag", name)
-    try:
-        _write_ref(path, version, exclusive=True)
-    except FileExistsError:
-        raise ValueError(f"tag {name!r} already exists in {table_dir!r}") from None
-    return version
-
-
-def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
-    """Create or MOVE a mutable named ref — Iceberg's branch. Defaults to
-    the current main version. Moving a branch never touches the main
-    hint, so an audit/WAP branch can roll back independently of what
-    readers of ``read_current_version`` see."""
-    import os
-
-    if version is None:
-        version = current_version(table_dir)
-        if version is None:
-            raise ValueError(f"{table_dir!r} has no committed version to branch from")
-    if version not in committed_versions(table_dir):
-        raise ValueError(
-            f"cannot branch at version {version} in {table_dir!r}: not committed"
-        )
-    _write_ref(_ref_path(table_dir, "branch", name), version, exclusive=False)
-    return version
-
-
-def rollback_branch(table_dir: str, name: str, to_version: int) -> int:
-    """Repoint an EXISTING branch at an earlier committed version without
-    moving main — the branch-scoped rollback_to_snapshot. One atomic
-    replace, same commit-marker gate as rollback_version."""
-    import os
-
-    path = _ref_path(table_dir, "branch", name)
-    if not os.path.exists(path):
-        raise ValueError(f"branch {name!r} does not exist in {table_dir!r}")
-    if to_version not in committed_versions(table_dir):
-        raise ValueError(
-            f"version {to_version} in {table_dir!r} is not a committed version"
-        )
-    _write_ref(path, to_version, exclusive=False)
-    return to_version
-
-
-def drop_ref(table_dir: str, kind: str, name: str) -> None:
-    """Remove a tag or branch; its pinned version becomes reclaimable by
-    the next ``expire_versions`` (unless otherwise kept)."""
-    import os
-
-    try:
-        os.unlink(_ref_path(table_dir, kind, name))
-    except FileNotFoundError:
-        raise ValueError(f"{kind} {name!r} does not exist in {table_dir!r}") from None
-
-
-def fast_forward(table_dir: str, branch: str) -> int:
-    """Iceberg's ``fast_forward`` procedure on the version protocol:
-    repoint MAIN at the version a branch has advanced (or rolled) to —
-    the publish step of branch-scoped WAP, where a batch commits on an
-    audit branch, audits run against the branch read, and main adopts
-    the branch head only after they pass. One atomic hint replace; the
-    branch ref itself is untouched."""
-    import os
-
-    path = _ref_path(table_dir, "branch", branch)
-    try:
-        with open(path) as f:
-            v = int(f.read().strip())
-    except FileNotFoundError:
-        raise ValueError(f"branch {branch!r} does not exist in {table_dir!r}") from None
-    if v not in committed_versions(table_dir):
-        raise ValueError(
-            f"branch {branch!r} points at uncommitted version {v}; refusing"
-        )
-    _repoint(table_dir, v)
-    return v
-
-
-def version_history(spark, table_dir: str) -> DataFrame:
-    """The table's commit history as a DataFrame — Iceberg's
-    ``table.snapshots`` / ``table.history`` metadata tables on the
-    fallback: one row per version directory with its commit status,
-    currency, file count, and byte size. Driver-side directory walk
-    (bounded by the version count — metadata, not data), then a local
-    relation; a real format serves this from the metadata log without
-    listing anything."""
-    import os
-
-    cur = current_version(table_dir)
-    rows = []
-    for v in _versions(table_dir):
-        vdir = os.path.join(table_dir, f"v{v:06d}")
-        n_files = 0
-        n_bytes = 0
-        for root, _dirs, files in os.walk(vdir):
-            for name in files:
-                if name.startswith(("_", ".")):
-                    continue  # markers/CRCs are protocol, not data
-                n_files += 1
-                try:
-                    n_bytes += os.stat(os.path.join(root, name)).st_size
-                except OSError:
-                    continue
-        rows.append(
-            (
-                v,
-                os.path.exists(os.path.join(vdir, _COMMIT_MARKER)),
-                v == cur,
-                n_files,
-                n_bytes,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version int, committed boolean, is_current boolean, "
-        "n_data_files long, data_bytes long",
-    )
-
-
-def changelog_between_versions(
-    spark, table_dir: str, v_from: int, v_to: int
-) -> DataFrame:
-    """EXECUTED row-level changelog between two committed versions — the
-    storage-layer twin of the cdc_changelog_* queries' planning model:
-    rows present at ``v_to`` but not ``v_from`` emit ``insert``, the
-    reverse emit ``delete`` (an updated row is a delete + insert pair,
-    exactly Delta CDF's representation without column-mapping). Multiset
-    semantics via ``exceptAll``: k extra copies of a duplicate row emit
-    k changelog rows.
-
-    Scale: each side is one scan + the exceptAll hash aggregate — the
-    honest cost of diffing two snapshots WITHOUT manifest metadata:
-    the versioned protocol stores a FULL data copy per version, so no
-    files are shared and there is no delta to walk. The manifest-layer
-    twin, ``filetable.changelog_table`` (r11), IS the delta walk — on
-    file-grain tables it reads only the files two snapshots disagree
-    on (``to ∖ from = added ∖ removed``) and falls back to this
-    two-scan shape only under live MOR deletes. Prefer it wherever the
-    table has a manifest; this verb remains for artifact-scale
-    versioned copies, where two bounded scans beat maintaining row
-    lineage."""
-    import os
-
-    committed = committed_versions(table_dir)
-    for v in (v_from, v_to):
-        if v not in committed:
-            raise ValueError(f"version {v} in {table_dir!r} is not committed")
-    rd = lambda v: spark.read.parquet(os.path.join(table_dir, f"v{v:06d}"))  # noqa: E731
-    from pyspark.sql import functions as F
-
-    frm, to = rd(v_from), rd(v_to)
-    ins = to.exceptAll(frm).withColumn("_change_type", F.lit("insert"))
-    dels = frm.exceptAll(to).withColumn("_change_type", F.lit("delete"))
-    return ins.unionByName(dels)
-
-
-def read_ref(spark, table_dir: str, kind: str, name: str) -> DataFrame:
-    """Read the table as pinned by a named ref — ``VERSION AS OF`` via a
-    branch/tag name. Fails loudly if the ref or its version dir is gone
-    (serving a different version silently would be wrong results)."""
-    import os
-
-    path = _ref_path(table_dir, kind, name)
-    try:
-        with open(path) as f:
-            v = int(f.read().strip())
-    except FileNotFoundError:
-        raise ValueError(f"{kind} {name!r} does not exist in {table_dir!r}") from None
-    vdir = os.path.join(table_dir, f"v{v:06d}")
-    if not os.path.isdir(vdir):
-        raise ValueError(
-            f"{kind} {name!r} points at version {v}, whose directory is missing"
-        )
-    return spark.read.parquet(vdir)

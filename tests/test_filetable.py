@@ -692,16 +692,32 @@ def test_branch_wap_flow_append_audit_fast_forward(spark, tmp_path):
     # publish
     assert ft.fast_forward_table(td, "audit") == v
     assert ft.read_table(spark, td).count() == 12
-    # failing audit: nothing staged survives, branch head unmoved
+    # failing audits: nothing staged survives, branch head unmoved
+    import numpy as np
+
     head = ft.branch_head(td, "audit")
-    with _pytest.raises(ValueError, match="audit #0 failed"):
-        ft.append_table(
-            spark.createDataFrame([(1, 1)], "k long, d long"),
-            td, n_files=1, branch="audit",
-            audits=[lambda staged: False],
-        )
-    assert ft.branch_head(td, "audit") == head
+    commit_dirs = set(os.listdir(os.path.join(td, "data")))
+    one = spark.createDataFrame([(1, 1)], "k long, d long")
+    for audits, msg in (
+        ([lambda staged: False], "audit #0 failed"),
+        # truth-tested, not `is False`: numpy.bool_(False) is not the
+        # False singleton and must fail the commit too
+        ([lambda staged: None, lambda staged: np.bool_(staged.isEmpty())],
+         "audit #1 failed"),
+        # an audit that cannot run fails loudly instead of passing
+        ([lambda staged: staged.select("nope").count()], "audit #0 errored"),
+    ):
+        with _pytest.raises(ValueError, match=msg):
+            ft.append_table(one, td, n_files=1, branch="audit", audits=audits)
+        assert ft.branch_head(td, "audit") == head
+        assert set(os.listdir(os.path.join(td, "data"))) == commit_dirs
     assert ft.read_table(spark, td, branch="audit").count() == 12
+    # an assert-style audit returning None passes
+    head = ft.append_table(
+        one, td, n_files=1, branch="audit", audits=[lambda staged: None]
+    )
+    assert ft.branch_head(td, "audit") == head
+    assert ft.read_table(spark, td, branch="audit").count() == 13
     # expire keeps the branch head even with keep_last=1
     ft.append_table(spark.createDataFrame([(7, 7)], "k long, d long"), td, n_files=1)
     out = ft.expire_table(td, keep_last=1)
@@ -736,23 +752,17 @@ def test_fold_pressure_policy(spark, tmp_path):
 def _plant_manifest(tmp_path, entries, stats_types):
     """Handcraft a table whose manifest is exactly `entries` — metadata-
     only planted inputs for planner-boundary tests (no data files
-    needed; the kernels under test read only bounds/bytes)."""
-    import json
-    import os
-
+    needed; the kernels under test read only bounds/bytes). The commit
+    goes through the real writer, so the version carries the header and
+    entry log every committed version has."""
     td = str(tmp_path / "planted")
-    os.makedirs(f"{td}/metadata")
     man = {
-        "version": 1,
         "operation": "create",
         "stats_types": stats_types,
         "summary": {},
         "entries": entries,
     }
-    with open(f"{td}/metadata/m000001.json", "w") as f:
-        json.dump(man, f)
-    with open(f"{td}/metadata/version-hint.text", "w") as f:
-        f.write("1")
+    assert ft._commit_manifest(td, man) == 1
     return td
 
 
@@ -2049,6 +2059,31 @@ def test_gc_orphans_removes_debris_outside_grace_only(spark, tmp_path):
     assert not os.path.exists(debris[0])
     assert sorted(r["k"] for r in ft.read_table(spark, td).collect()) == want
     assert 999 not in want
+
+
+def test_claimed_manifest_without_header_is_in_flight(spark, tmp_path, monkeypatch):
+    """A commit writes its manifest, then its entry log, then its header
+    and only then publishes; a claimed manifest with no header is an
+    in-flight (or dead) commit. Lock-free listers skip it — GC on both
+    planning paths, expiry and the snapshots table never parse it — and
+    the next commit claims the number after it."""
+    import time
+
+    td = str(tmp_path / "inflight")
+    mk = lambda rows: spark.createDataFrame(rows, "k long, d long")  # noqa: E731
+    ft.create_table(mk([(i, i) for i in range(10)]), td, stats_cols=["d"], n_files=1)
+    # an O_EXCL claim whose body, log and header never landed
+    os.close(os.open(ft._manifest_path(td, 2), os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+    assert ft._manifest_versions(td) == [1]
+    assert ft.snapshots_table(spark, td).count() == 1
+    later = time.time() + 10
+    assert ft.gc_orphans(td, grace_seconds=0, now=later, spark=spark)["files_removed"] == 0
+    monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
+    assert ft.gc_orphans(td, grace_seconds=0, now=later, spark=spark)["files_removed"] == 0
+    assert ft.expire_table(td, keep_last=1, spark=spark)["manifests_removed"] == []
+    assert ft.append_table(mk([(10, 10)]), td, n_files=1) == 3
+    assert ft._manifest_versions(td) == [1, 3]
+    assert ft.read_table(spark, td).count() == 11
 
 
 def test_gc_orphans_keeps_files_referenced_only_by_tag(spark, tmp_path):
@@ -3798,10 +3833,46 @@ def test_delta_commits_never_compose_full_entry_list(
     assert {r["_change_type"] for r in ch.collect()} == {"insert"}
 
 
+def _assert_current_format(td) -> int:
+    """The on-disk invariant filetable's readers rely on, checked over
+    every manifest FILE on disk (not ``_manifest_versions``, which lists
+    only versions with a header): each has a header carrying
+    ``n_entries`` (exact), ``form`` and ``schema``; each full or
+    external version has its entry log; and every parquet manifest table
+    the verbs materialised has the ``key_cols``/``target``/``bucket``
+    columns. Returns the number of manifest tables checked."""
+    import pyarrow.parquet as pq
+
+    meta = os.path.join(td, "metadata")
+    versions = sorted(
+        int(n[1:7]) for n in os.listdir(meta)
+        if n.startswith("m") and n.endswith(".json")
+    )
+    assert versions
+    tables = 0
+    for v in versions:
+        assert os.path.exists(ft._header_path(td, v)), f"v{v} has no header"
+        hdr = ft.read_manifest_header(td, v)
+        assert {"n_entries", "form", "schema"} <= set(hdr), (v, sorted(hdr))
+        assert hdr["n_entries"] == len(ft.read_manifest(td, v)["entries"]), v
+        if hdr["form"] in ("full", "external"):
+            assert os.path.exists(ft._entries_jsonl_path(td, v)), f"v{v} has no log"
+        else:
+            assert hdr["form"] == "delta", (v, hdr["form"])
+        pdir = ft.manifest_parquet_dir(td, v)
+        if os.path.isdir(pdir):
+            cols = pq.ParquetDataset(pdir).schema.names
+            assert {"key_cols", "target", "bucket"} <= set(cols), (v, cols)
+            tables += 1
+    return tables
+
+
 def test_delta_regime_row_and_state_equal_to_full_regime(spark, tmp_path):
     """The same verb history under the delta regime (threshold 0) and
     the classic regime resolves to the SAME entries (by id and row/byte
-    accounting) and the same visible rows."""
+    accounting) and the same visible rows — and in both regimes every
+    version the verbs commit is in the current on-disk format
+    (``_assert_current_format``)."""
     results = {}
     for regime, thr in (("full", None), ("delta", 0)):
         td, mk = _mk_delta_table(spark, tmp_path, f"eq_{regime}")
@@ -3821,6 +3892,20 @@ def test_delta_regime_row_and_state_equal_to_full_regime(spark, tmp_path):
                 },
             )
             ft.delete_positions_dv(spark, td, F.col("d") == 50)
+            ft.compact_table(spark, td, target_bytes=1 << 30)
+            mk([(900, 900, 9.0), (901, 901, 9.0)]).coalesce(1).write.parquet(
+                os.path.join(td, "data", "imported")
+            )
+            ft.add_files(spark, td, os.path.join("data", "imported"))
+            ft.create_branch(td, "b")
+            ft.append_table(mk([(950, 950, 0.5)]), td, n_files=1, branch="b")
+            ft.merge_into_mor(
+                spark, td, spark.createDataFrame([(101, 1)], "k long, n long"),
+                on=("k", "k"), when_matched_update={"x": F.lit(-1.0)},
+            )
+            # the job-path verbs materialise manifest tables
+            n_tables = _assert_current_format(td)
+            assert thr is None or n_tables > 0
         finally:
             ft.PLAN_SPARK_THRESHOLD = old
         man = ft.read_manifest(td)
@@ -3845,8 +3930,20 @@ def test_delta_chain_materializes_at_cap_and_streams(
     """The MANIFEST_DELTA_MAX_CHAIN-th delta commit materializes an
     external-full snapshot (chain resets; deeper reads never walk more
     than the cap) and the external form resolves row-equal from its own
-    entry log."""
+    entry log. The chain's full base carries a header without ``form``,
+    as full headers were written before they recorded it (persisted
+    tables, e.g. published lakehouse artifacts, hold them): it still
+    classifies as full."""
+    import json
+
     td, mk = _mk_delta_table(spark, tmp_path)
+    hp = ft._header_path(td, 1)
+    with open(hp) as f:
+        hdr = json.load(f)
+    assert hdr.pop("form") == "full"
+    with open(hp, "w") as f:
+        json.dump(hdr, f)
+    assert ft._manifest_form(td, 1) == ("full", None)
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
     for i in range(ft.MANIFEST_DELTA_MAX_CHAIN + 2):
         ft.append_table(mk([(1000 + i, 1000 + i, 0.0)]), td, n_files=1)

@@ -57,7 +57,9 @@ def test_prenormed_equals_cosine_expression(spark):
                 F.col("va"), F.col("vb"), norm(F.col("va")), norm(F.col("vb"))
             ).alias("pre"),
         )
-        .filter(F.col("ref") != F.col("pre"))
+        # null-safe: a NULL on one side only is a divergence too (plain
+        # != yields NULL there and the filter would drop the row)
+        .filter(~F.col("ref").eqNullSafe(F.col("pre")))
         .count()
     )
     assert bad == 0

@@ -228,3 +228,43 @@ def test_bm25_incremental_equals_rebuild(spark):
     incr = [tuple(map(repr, r)) for r in text_bm25_incremental(spark, sf).collect()]
     comp = [tuple(map(repr, r)) for r in text_bm25_compacted(spark, sf).collect()]
     assert full == incr == comp
+
+
+def test_rag_retrieval_null_text_docs_match_oracle(spark, sf_dir, monkeypatch):
+    """A document whose text is NULL has no chunks on either engine: it
+    must not add to the chunk total under idf (greatest() skips the NULL
+    ceil, so the per-doc formula alone counts it as one chunk). Compared
+    against the DuckDB oracle on a small corpus with three NULL-text
+    documents, where each phantom chunk would move the rounded scores."""
+    import duckdb
+    import pandas as pd
+
+    import spark_iceberg_jobs_spark.queries.llm as llm
+
+    pdf = pd.read_parquet(f"{sf_dir}/documents.parquet").head(12)
+    nulls = pd.DataFrame(
+        {
+            "doc_id": [1000, 1001, 1002],
+            "text": [None, None, None],
+            "lang": ["en"] * 3,
+            "source": ["src1"] * 3,
+            "n_chars": [0] * 3,
+        }
+    )
+    pdf = pd.concat([pdf, nulls], ignore_index=True).astype({"doc_id": "int64"})
+    docs = spark.createDataFrame(
+        pdf.astype(object).where(pdf.notna(), None),
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    monkeypatch.setattr(llm, "read_fixture", lambda s, d, t: docs)
+    got = sorted(
+        (r.query_doc, r.rnk, r.doc_id, r.chunk_id, round(r.sim, 4))
+        for r in llm.pipeline_rag_retrieval(spark, "x").collect()
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(
+        (int(q), int(k), int(d), int(c), round(float(s), 4))
+        for q, k, d, c, s in con.execute(llm.RAG_ORACLE).fetchall()
+    )
+    assert got and got == want

@@ -199,80 +199,6 @@ def test_python_datasource_partitions_and_determinism(spark):
     assert rows8 == rows3 and len(rows8) == 1000
 
 
-def test_wap_write_publishes_only_after_audits(spark, tmp_path):
-    """Write-Audit-Publish: audits run against the STAGED files; a failing
-    or erroring audit discards the staging and leaves the table path
-    unobservable, a passing run publishes atomically."""
-    import os
-
-    import pytest
-
-    from spark_iceberg_jobs_spark.sources.writers import wap_write_parquet
-
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", -1.0), (3, "c", 20.0)],
-        "id long, k string, v double",
-    )
-    final = str(tmp_path / "wap_table")
-
-    # audit failure (negative value present) -> no publish, staging gone
-    with pytest.raises(ValueError, match="audit #1 failed"):
-        wap_write_parquet(
-            df,
-            final,
-            audits=[
-                lambda s: s.count() == 3,
-                lambda s: s.filter("v < 0").isEmpty(),
-            ],
-        )
-    assert not os.path.exists(final)
-    assert not any(".staging." in n for n in os.listdir(tmp_path))
-
-    # erroring audit must fail loudly, not pass silently
-    with pytest.raises(ValueError, match="audit #0 errored"):
-        wap_write_parquet(df, final, audits=[lambda s: s.select("nope").count()])
-    assert not os.path.exists(final)
-
-    # clean batch publishes; the audit saw the staged files, and readers
-    # see exactly the written rows
-    clean = df.filter("v >= 0")
-    out = wap_write_parquet(
-        clean,
-        final,
-        audits=[lambda s: s.count() == 2, lambda s: s.filter("v < 0").isEmpty()],
-    )
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == [(1, "a", 10.0), (3, "c", 20.0)]
-    assert not any(".staging." in n for n in os.listdir(tmp_path))
-
-    # RE-publish replaces the table (rename-aside swap, review finding:
-    # the first cut routed through publish_atomic, whose corpse-recovery
-    # rmtree'd the live publish and whose _OK convention would have
-    # discarded the new batch)
-    batch2 = spark.createDataFrame([(9, "z", 1.0)], "id long, k string, v double")
-    wap_write_parquet(batch2, final, audits=[lambda s: s.count() == 1])
-    got2 = [tuple(r) for r in spark.read.parquet(final).collect()]
-    assert got2 == [(9, "z", 1.0)]
-    # a FAILED re-publish attempt leaves the previous table intact
-    with pytest.raises(ValueError, match="audit #0 failed"):
-        wap_write_parquet(df, final, audits=[lambda s: False])
-    assert [tuple(r) for r in spark.read.parquet(final).collect()] == [(9, "z", 1.0)]
-    # FALSY non-bool returns fail too (review finding: numpy.bool_(False)
-    # is not the False singleton and an `is False` check published the
-    # failing batch)
-    import numpy as np
-
-    with pytest.raises(ValueError, match="audit #0 failed"):
-        wap_write_parquet(
-            df, final, audits=[lambda s: np.bool_(s.filter("v < 0").isEmpty())]
-        )
-    assert [tuple(r) for r in spark.read.parquet(final).collect()] == [(9, "z", 1.0)]
-    leftovers = [
-        n for n in os.listdir(tmp_path) if ".staging." in n or ".swap_old." in n
-    ]
-    assert leftovers == []
-
-
 def test_read_binary_files_blob_ingestion_feeds_decode(spark, tmp_path):
     """binaryFile source: each blob is one (path, length, content) row;
     pathGlobFilter prunes at LISTING time; selecting metadata only never
@@ -349,498 +275,3 @@ def test_read_avro_gates_loudly_or_roundtrips(spark, tmp_path):
     out = str(tmp_path / "t.avro")
     spark.range(5).write.format("avro").save(out)
     assert read_avro(spark, out).count() == 5
-
-
-def test_versioned_table_commit_rollback_branch_expire(spark, tmp_path):
-    """The version-hint commit protocol (the EXECUTED twin of
-    maintenance_rollback_plan): commits are immutable version dirs with
-    an atomically repointed hint; rollback is one hint replace (no data
-    moves) and old versions stay readable; a commit AFTER a rollback
-    branches forward to max+1, never reusing the rolled-over version
-    (the Iceberg rollback_to_snapshot + append shape); a torn/crashed
-    commit leaves the previous version current; expiry keeps the current
-    and newest versions."""
-    import os
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        current_version,
-        expire_versions,
-        read_current_version,
-        rollback_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "tbl")
-
-    def frame(tag):
-        return spark.createDataFrame([(1, tag)], "k int, tag string")
-
-    def current_tag():
-        return read_current_version(spark, tbl).collect()[0].tag
-
-    assert versioned_write(frame("a"), tbl) == 1
-    assert versioned_write(frame("b"), tbl) == 2
-    assert current_version(tbl) == 2 and current_tag() == "b"
-
-    # rollback: hint repoints, data untouched, v2 still on disk
-    assert rollback_version(tbl, 1) == 1
-    assert current_tag() == "a"
-    assert os.path.isdir(os.path.join(tbl, "v000002"))
-    import pytest
-
-    with pytest.raises(ValueError, match="does not exist"):
-        rollback_version(tbl, 99)
-
-    # commit after rollback branches FORWARD (never reuses v2)
-    assert versioned_write(frame("c"), tbl) == 3
-    assert current_tag() == "c"
-
-    # crash simulation: a new version dir written but hint never
-    # repointed (and no commit marker — audits never ran) — readers stay
-    # on the committed version, and rollback REFUSES to serve the torn
-    # dir as current (ADVICE r9: unaudited data must never become
-    # current via rollback)
-    frame("torn").write.mode("overwrite").parquet(os.path.join(tbl, "v000004"))
-    assert current_version(tbl) == 3 and current_tag() == "c"
-    with pytest.raises(ValueError, match="never committed"):
-        rollback_version(tbl, 4)
-
-    # a stale hint tmp from a dead writer is inert
-    with open(os.path.join(tbl, "version-hint.text.tmp.999"), "w") as f:
-        f.write("4")
-    assert current_version(tbl) == 3
-
-    # expiry keeps current + newest, reclaims the rest
-    removed = expire_versions(tbl, keep_last=2)
-    assert removed == [1, 2]
-    assert current_version(tbl) == 3 and current_tag() == "c"
-
-    # hint pointing at a reclaimed dir must fail loudly, not serve
-    # another version
-    expire_versions(tbl, keep_last=0)  # keeps only current (3); torn v4 goes
-    assert not os.path.isdir(os.path.join(tbl, "v000004"))
-    with open(os.path.join(tbl, "version-hint.text"), "w") as f:
-        f.write("2")
-    with pytest.raises(ValueError, match="missing directory"):
-        current_version(tbl)
-
-
-def test_versioned_write_audits_gate_the_repoint(spark, tmp_path):
-    """WAP over the version protocol: the unreferenced version dir is the
-    audit branch — a failing (or numpy-falsy, or raising) audit tears the
-    new version down and the hint never moves; a passing audit set
-    commits. The failed attempt's version number is reused by the next
-    commit only if its dir was fully removed (it is)."""
-    import numpy as np
-    import pytest
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        current_version,
-        read_current_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    f1 = spark.createDataFrame([(1, "good")], "k int, tag string")
-    assert versioned_write(f1, tbl, audits=[lambda d: d.count() == 1]) == 1
-
-    bad = spark.createDataFrame([(2, "bad")], "k int, tag string")
-    with pytest.raises(ValueError, match="audit #0 failed"):
-        versioned_write(bad, tbl, audits=[lambda d: np.bool_(False)])
-    with pytest.raises(ValueError, match="audit #0 errored"):
-        versioned_write(bad, tbl, audits=[lambda d: 1 / 0])
-    assert current_version(tbl) == 1
-    assert read_current_version(spark, tbl).collect()[0].tag == "good"
-
-    # assert-style audit (returns None) passes; table advances
-    assert versioned_write(bad, tbl, audits=[lambda d: None]) == 2
-    assert read_current_version(spark, tbl).collect()[0].tag == "bad"
-
-
-def test_versioned_mor_upsert_and_rollback_integration(spark, tmp_path):
-    """The storage protocol and the MOR read path compose into the full
-    lakehouse loop: v1 = base table; v2 = the MOR-served state of an
-    equality-delete + re-insert batch (audited commit — the audit is the
-    WAP gate on the branch); rollback to v1 restores the pre-delete
-    state byte-for-byte; a post-rollback commit branches to v3."""
-    from spark_iceberg_jobs_spark.operators.mor import mor_read_equality_deletes
-    from spark_iceberg_jobs_spark.sources.writers import (
-        read_current_version,
-        rollback_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "users")
-    base = spark.createDataFrame(
-        [(1, "alice", 10), (2, "bob", 20), (3, "carol", 30)],
-        "uid int, name string, score int",
-    )
-    assert versioned_write(base, tbl) == 1
-
-    # GDPR-style: delete uid 2, re-insert uid 3 with a corrected score
-    deletes = spark.createDataFrame([(2,), (3,)], "uid int")
-    appends = spark.createDataFrame([(3, "carol", 35)], "uid int, name string, score int")
-    served = mor_read_equality_deletes(
-        read_current_version(spark, tbl), deletes, appends, key_cols=["uid"]
-    )
-    assert versioned_write(served, tbl, audits=[lambda d: d.count() > 0]) == 2
-
-    now = {(r.uid, r.name, r.score) for r in read_current_version(spark, tbl).collect()}
-    assert now == {(1, "alice", 10), (3, "carol", 35)}
-
-    rollback_version(tbl, 1)
-    before = {
-        (r.uid, r.name, r.score) for r in read_current_version(spark, tbl).collect()
-    }
-    assert before == {(1, "alice", 10), (2, "bob", 20), (3, "carol", 30)}
-
-    assert versioned_write(appends, tbl) == 3  # branches forward past v2
-
-
-def test_versioned_write_two_concurrent_writers_distinct_versions(spark, tmp_path):
-    """The CAS claim (VERDICT r9 item 5): two writers committing to the
-    same table path CONCURRENTLY must land in distinct versions — the
-    mkdir O_EXCL claim makes computing the same next version impossible
-    — and both committed version dirs must be complete and readable.
-    The hint resolves to whichever repoint landed last (os.replace is
-    atomic), never a torn state."""
-    import threading
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        committed_versions,
-        current_version,
-        read_current_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "race_tbl")
-    committed: list[int] = []
-    errs: list[Exception] = []
-    barrier = threading.Barrier(2)
-
-    def writer(tag):
-        df = spark.createDataFrame([(1, tag)], "k int, tag string")
-        try:
-            barrier.wait(timeout=30)
-            committed.append(versioned_write(df, tbl))
-        except Exception as e:  # noqa: BLE001
-            errs.append(e)
-
-    for rnd in range(3):
-        committed.clear()
-        errs.clear()
-        ts = [
-            threading.Thread(target=writer, args=(f"w{i}_{rnd}",)) for i in (1, 2)
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join(timeout=120)
-            assert not t.is_alive(), "versioned_write deadlocked"
-        assert not errs, errs
-        assert len(set(committed)) == 2, f"writers shared a version: {committed}"
-        assert set(committed) <= set(committed_versions(tbl))
-        assert current_version(tbl) in committed
-        # the served table is exactly ONE writer's batch, intact
-        assert read_current_version(spark, tbl).count() == 1
-
-
-def test_versioned_refs_tag_branch_lifecycle(spark, tmp_path):
-    """Named refs over the version protocol (VERDICT r9 item 7, Iceberg
-    branch/tag semantics): a tagged version SURVIVES expiry until the
-    tag drops; a branch rolls back without moving main; tags are
-    immutable (create-twice raises); refs only ever pin COMMITTED
-    versions."""
-    import os
-
-    import pytest
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        create_branch,
-        create_tag,
-        current_version,
-        drop_ref,
-        expire_versions,
-        list_refs,
-        read_ref,
-        rollback_branch,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "reft")
-
-    def frame(tag):
-        return spark.createDataFrame([(1, tag)], "k int, tag string")
-
-    for t in ("a", "b", "c", "d"):
-        versioned_write(frame(t), tbl)
-    assert current_version(tbl) == 4
-
-    # tag v1 (an audit snapshot), branch "audit" at v3
-    assert create_tag(tbl, "release-1", 1) == 1
-    assert create_branch(tbl, "audit", 3) == 3
-    assert list_refs(tbl) == {"tag.release-1": 1, "branch.audit": 3}
-    with pytest.raises(ValueError, match="already exists"):
-        create_tag(tbl, "release-1", 2)  # tags are immutable
-
-    # expiry: keep_last=1 would normally keep only {4}; the tag pins v1
-    # and the branch pins v3 — both survive, v2 goes
-    removed = expire_versions(tbl, keep_last=1)
-    assert removed == [2]
-    assert read_ref(spark, tbl, "tag", "release-1").collect()[0].tag == "a"
-    assert read_ref(spark, tbl, "branch", "audit").collect()[0].tag == "c"
-
-    # branch rollback: audit moves 3 → 1 while MAIN stays at 4
-    assert rollback_branch(tbl, "audit", 1) == 1
-    assert read_ref(spark, tbl, "branch", "audit").collect()[0].tag == "a"
-    assert current_version(tbl) == 4
-
-    # refs gate on the commit marker: a torn dir cannot be tagged or
-    # branched (same rule as rollback_version)
-    frame("torn").write.mode("overwrite").parquet(os.path.join(tbl, "v000009"))
-    with pytest.raises(ValueError, match="not a committed version"):
-        create_tag(tbl, "bad", 9)
-    with pytest.raises(ValueError, match="not committed"):
-        create_branch(tbl, "bad", 9)
-    with pytest.raises(ValueError, match="not a committed version"):
-        rollback_branch(tbl, "audit", 9)
-
-    # default branch point = current main
-    assert create_branch(tbl, "wip") == 4
-
-    # v3 was released the moment audit moved off it; dropping the tag and
-    # the audit branch releases v1 too — the next expiry reclaims both
-    # (the torn v9 orphan survives only as the newest version)
-    drop_ref(tbl, "tag", "release-1")
-    with pytest.raises(ValueError, match="does not exist"):
-        drop_ref(tbl, "tag", "release-1")
-    drop_ref(tbl, "branch", "audit")
-    removed = expire_versions(tbl, keep_last=1)
-    assert removed == [1, 3]  # v9 kept: it is the newest (keep_last=1)
-
-    # a ref whose version dir was reclaimed out from under it (hand-built
-    # here) must fail loudly on read, never serve another version
-    with open(os.path.join(tbl, "refs", "branch.stale"), "w") as f:
-        f.write("3")
-    with pytest.raises(ValueError, match="directory is missing"):
-        read_ref(spark, tbl, "branch", "stale")
-
-
-def test_rollback_accepts_committed_but_unreferenced_version(spark, tmp_path):
-    """A crash BETWEEN the commit marker and the repoint leaves a
-    committed-but-never-current version; it passed its audits, so
-    rollback (roll-FORWARD here) may serve it — the marker, not hint
-    history, is the gate."""
-    import os
-    import shutil
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        current_version,
-        read_current_version,
-        rollback_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "fwd")
-    versioned_write(spark.createDataFrame([(1, "base")], "k int, tag string"), tbl)
-
-    # simulate marker-then-crash: commit v2 normally, then rewind the
-    # hint file to v1 (as if the repoint never happened)
-    versioned_write(spark.createDataFrame([(2, "next")], "k int, tag string"), tbl)
-    hint = os.path.join(tbl, "version-hint.text")
-    with open(hint + ".t", "w") as f:
-        f.write("1")
-    shutil.move(hint + ".t", hint)
-    assert current_version(tbl) == 1
-
-    assert rollback_version(tbl, 2) == 2  # marker present → servable
-    assert read_current_version(spark, tbl).collect()[0].tag == "next"
-
-
-def test_branch_wap_flow_and_fast_forward(spark, tmp_path):
-    """Branch-scoped WAP (Iceberg's spark.wap.branch): a batch commits on
-    the 'audit' branch — version dir + commit marker land, the branch ref
-    moves — while MAIN's readers see nothing; audits run against the
-    branch read; fast_forward publishes the branch head to main in one
-    atomic hint replace. A second fast_forward of a missing branch, and
-    of a hand-torn branch ref, both fail loudly."""
-    import os
-
-    import pytest
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        current_version,
-        fast_forward,
-        read_current_version,
-        read_ref,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "wapb")
-    versioned_write(spark.createDataFrame([(1, "live")], "k int, tag string"), tbl)
-    assert current_version(tbl) == 1
-
-    # stage on the branch: main must not move
-    staged = spark.createDataFrame([(2, "staged")], "k int, tag string")
-    v = versioned_write(staged, tbl, branch="audit")
-    assert v == 2
-    assert current_version(tbl) == 1, "main must not see the branch commit"
-    assert read_current_version(spark, tbl).collect()[0].tag == "live"
-
-    # audit against the BRANCH read (what was written is what is audited)
-    branch_df = read_ref(spark, tbl, "branch", "audit")
-    assert branch_df.collect()[0].tag == "staged"
-
-    # publish: main adopts the branch head
-    assert fast_forward(tbl, "audit") == 2
-    assert current_version(tbl) == 2
-    assert read_current_version(spark, tbl).collect()[0].tag == "staged"
-
-    with pytest.raises(ValueError, match="does not exist"):
-        fast_forward(tbl, "nope")
-    # a branch ref pointing at an uncommitted version must not publish
-    with open(os.path.join(tbl, "refs", "branch.torn"), "w") as f:
-        f.write("9")
-    os.mkdir(os.path.join(tbl, "v000009"))  # claimed, never committed
-    with pytest.raises(ValueError, match="uncommitted"):
-        fast_forward(tbl, "torn")
-
-
-def test_version_history_metadata_table(spark, tmp_path):
-    """version_history = the snapshots/history metadata table: one row
-    per version dir with commit status, currency, and data-file stats;
-    protocol files (_VERSION_COMMITTED, _SUCCESS, CRCs) never count as
-    data files."""
-    import os
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        rollback_version,
-        version_history,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "hist")
-    versioned_write(spark.createDataFrame([(1,)], "k int"), tbl)
-    versioned_write(spark.createDataFrame([(2,), (3,)], "k int"), tbl)
-    os.mkdir(os.path.join(tbl, "v000003"))  # torn claim: never committed
-    rollback_version(tbl, 1)
-
-    h = {r.version: r for r in version_history(spark, tbl).collect()}
-    assert set(h) == {1, 2, 3}
-    assert h[1].committed and h[1].is_current
-    assert h[2].committed and not h[2].is_current
-    assert not h[3].committed and not h[3].is_current
-    assert h[1].n_data_files >= 1 and h[1].data_bytes > 0
-    assert h[3].n_data_files == 0 and h[3].data_bytes == 0
-
-
-def test_changelog_between_versions_multiset(spark, tmp_path):
-    """Executed row-level CDF between two committed versions: an update
-    is a delete+insert pair, duplicates diff with MULTISET semantics
-    (one extra copy -> one changelog row), and uncommitted endpoints are
-    rejected."""
-    import os
-
-    import pytest
-
-    from spark_iceberg_jobs_spark.sources.writers import (
-        changelog_between_versions,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "cdf")
-    v1 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (2, "b"), (3, "c")], "k int, val string"
-    )
-    v2 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "C"), (4, "d")], "k int, val string"
-    )
-    versioned_write(v1, tbl)
-    versioned_write(v2, tbl)
-
-    ch = sorted(
-        (r.k, r.val, r._change_type)
-        for r in changelog_between_versions(spark, tbl, 1, 2).collect()
-    )
-    assert ch == [
-        (2, "b", "delete"),   # one of the two duplicate copies went away
-        (3, "C", "insert"),   # the update pair...
-        (3, "c", "delete"),
-        (4, "d", "insert"),
-    ]
-
-    os.mkdir(os.path.join(tbl, "v000007"))
-    with pytest.raises(ValueError, match="not committed"):
-        changelog_between_versions(spark, tbl, 1, 7)
-
-
-def test_full_lakehouse_loop_wap_cdf_rollback_integration(spark, tmp_path):
-    """The executed verbs compose into the complete lakehouse loop:
-    v1 base -> MOR upsert staged on a WAP branch (main blind) -> audit on
-    the branch read -> fast_forward publishes -> the executed row-level
-    CDF between v1 and v2 is EXACTLY the upsert's delta (update = delete+
-    insert pair, GDPR delete = bare delete) -> tag v1, rollback main to
-    it, and the tagged pre-upsert state survives an aggressive expiry
-    while the branch still serves v2."""
-    from spark_iceberg_jobs_spark.operators.mor import mor_read_equality_deletes
-    from spark_iceberg_jobs_spark.sources.writers import (
-        changelog_between_versions,
-        create_tag,
-        current_version,
-        expire_versions,
-        fast_forward,
-        read_current_version,
-        read_ref,
-        rollback_version,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "loop")
-    base = spark.createDataFrame(
-        [(1, "alice", 10), (2, "bob", 20), (3, "carol", 30)],
-        "uid int, name string, score int",
-    )
-    assert versioned_write(base, tbl) == 1
-
-    # stage the MOR-served upsert on the audit branch; main stays at v1
-    deletes = spark.createDataFrame([(2,), (3,)], "uid int")
-    appends = spark.createDataFrame(
-        [(3, "carol", 35)], "uid int, name string, score int"
-    )
-    served = mor_read_equality_deletes(
-        read_current_version(spark, tbl), deletes, appends, key_cols=["uid"]
-    )
-    assert versioned_write(served, tbl, branch="audit") == 2
-    assert current_version(tbl) == 1
-
-    # audit the branch read, then publish
-    audit_rows = {tuple(r) for r in read_ref(spark, tbl, "branch", "audit").collect()}
-    assert audit_rows == {(1, "alice", 10), (3, "carol", 35)}
-    assert fast_forward(tbl, "audit") == 2
-
-    # the executed CDF between the two committed versions IS the upsert
-    ch = sorted(
-        (r.uid, r.name, r.score, r._change_type)
-        for r in changelog_between_versions(spark, tbl, 1, 2).collect()
-    )
-    assert ch == [
-        (2, "bob", 20, "delete"),       # GDPR delete: bare delete
-        (3, "carol", 30, "delete"),     # update pair...
-        (3, "carol", 35, "insert"),
-    ]
-
-    # tag the pre-upsert state, roll main back to it, expire aggressively:
-    # the tag pins v1, the branch still serves v2
-    create_tag(tbl, "pre-upsert", 1)
-    rollback_version(tbl, 1)
-    removed = expire_versions(tbl, keep_last=1)
-    assert removed == []  # v1 current+tagged, v2 newest+branch-pinned
-    assert {tuple(r) for r in read_ref(spark, tbl, "tag", "pre-upsert").collect()} == {
-        (1, "alice", 10),
-        (2, "bob", 20),
-        (3, "carol", 30),
-    }
-    assert {tuple(r) for r in read_ref(spark, tbl, "branch", "audit").collect()} == {
-        (1, "alice", 10),
-        (3, "carol", 35),
-    }
