@@ -1156,6 +1156,13 @@ def _mmr_greedy_cogroup(cand: DataFrame, pair: DataFrame, *, k: int, lam: float)
     )
 
 
+#: Largest candidate pool ``mmr_rerank`` accepts: each probe's pool² pair
+#: rows land in ONE Python worker of the cogrouped greedy pass, so 1024
+#: (~10^6 pair rows per probe) bounds that worker's memory. A larger pool
+#: raises instead of truncating, so no candidate is dropped silently.
+MMR_MAX_POOL = 1024
+
+
 def mmr_rerank(
     embeddings: DataFrame,
     probes: DataFrame,
@@ -1208,6 +1215,11 @@ def mmr_rerank(
         raise ValueError(f"lam must be in [0, 1], got {lam}")
     if k > pool:
         raise ValueError(f"k ({k}) cannot exceed the candidate pool ({pool})")
+    if pool > MMR_MAX_POOL:
+        raise ValueError(
+            f"pool ({pool}) exceeds MMR_MAX_POOL ({MMR_MAX_POOL}): each probe's "
+            "pool² pair rows are scored in one Python worker"
+        )
     # per-side norms once per row below the join (r15, _cosine_prenormed);
     # the candidate pool carries its norm so the pool² pairwise cosines
     # reuse it too — bit-identical to the per-pair HOF cosine

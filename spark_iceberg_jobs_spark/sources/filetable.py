@@ -53,12 +53,15 @@ Round 12 additions (VERDICT r11 items 1–5):
 - ``merge_into_mor`` — MERGE INTO in merge-on-read mode: matched keys →
   one equality-delete file, updates/inserts appended at the same
   sequence, zero data files rewritten; stacks against live MOR state.
-- Two-level planning is the DEFAULT read path: ``scan_range`` /
-  ``scan_box`` / ``point_lookup`` dispatch through ``plan_scan_auto``;
-  past the threshold, pruning runs as a Spark job over the parquet
-  manifest table (built from the commit-time flat entry log by a pure
-  Spark job) and schema resolution reads the O(schema) header sidecar —
-  the warm path of a million-file table never parses the JSON manifest.
+- Two-level planning is the DEFAULT path of every verb: one manifest
+  view (``_manifest_view``) decides the regime by entry count, and one
+  planner (``_plan_box``) over one entry fetch (``_data_entries``)
+  serves ``scan_range`` / ``scan_box`` / ``point_lookup`` and the
+  DELETE/UPDATE/MERGE candidate sets; past the threshold, pruning runs
+  as a Spark job over the parquet manifest table (built from the
+  commit-time flat entry log by a pure Spark job) and schema resolution
+  reads the O(schema) header sidecar — the warm path of a million-file
+  table never parses the JSON manifest.
 - ``gc_orphans`` — executed remove_orphan_files: per-manifest retention
   (tags/branches keep their files) + a grace window for in-flight
   commits.
@@ -583,20 +586,20 @@ def _materialize_entries_jsonl(table_dir: str, manifest: dict, nxt: int) -> int:
     return n
 
 
-def _manifest_for_write(
-    table_dir: str, branch: str | None = None
-) -> dict:
-    """Two-level manifest access for a WRITE verb (VERDICT r13 item 1):
-    under the threshold, the resolved full manifest (entries inline);
-    past it, the O(schema) header with ``entries: None`` — the verb then
-    fetches only the entries it touches from the parquet manifest table
-    and commits a DELTA through ``_commit_update``."""
+def _manifest_view(table_dir: str, branch: str | None = None) -> dict:
+    """The manifest a verb plans from — where the regime is decided
+    (VERDICT r13 item 1): under the threshold, the resolved full
+    manifest (entries inline); past it, the O(schema) header with
+    ``entries: None``. Verbs then go through ``_live_deletes`` /
+    ``_data_entries`` / ``_plan_box``, which fetch only the entries they
+    touch from the parquet manifest table, and write verbs commit a
+    DELTA through ``_commit_update``."""
     version = (
         branch_head(table_dir, branch)
         if branch is not None
         else current_manifest_version(table_dir)
     )
-    if not _over_plan_threshold(table_dir, None, version):
+    if not _over_plan_threshold(table_dir, version):
         return read_manifest(table_dir, version)
     hdr = dict(read_manifest_header(table_dir, version))
     hdr["version"] = version
@@ -623,7 +626,7 @@ def _commit_update(
       the full list and commit an inline-full manifest through
       ``_commit_manifest``;
     - ``prev`` is a header view (``entries is None`` — past the
-      threshold, from ``_manifest_for_write``): write a DELTA manifest
+      threshold, from ``_manifest_view``): write a DELTA manifest
       — header fields + ``{base, removed, added}`` — in O(delta) driver
       work; every MANIFEST_DELTA_MAX_CHAIN-th commit materializes the
       chain into an external-full snapshot by STREAMING the ancestor
@@ -987,7 +990,7 @@ def append_table(
     # r14: past the threshold this is the O(schema) header and the
     # commit below is a manifest DELTA — an append to a million-file
     # table is O(new files) driver-side, never O(#files)
-    prev = _manifest_for_write(table_dir, branch)
+    prev = _manifest_view(table_dir, branch)
     cur = _current_names(prev)
     if set(df.columns) != set(cur.values()):
         raise ValueError(
@@ -1333,19 +1336,26 @@ def _decode_bounds(manifest: dict, col: str):
     return bounds
 
 
-def _split_for_scan(man: dict, verb: str) -> tuple[list[dict], list[dict]]:
-    """Entry split for the PRUNED-SCAN verbs (r13): file-local deletion
-    vectors COMPOSE with zone-map pruning — a kept file just applies its
-    own bitmap — while equality/position delete files keep raising
-    (their visibility is cross-file, so a pruned read could not apply
-    them soundly without reading unpruned files)."""
-    data, eqs, poss, dvs = _split_entries(man)
-    if eqs or poss:
+def _scan_dvs(deletes: list[dict], verb: str) -> list[dict]:
+    """The deletion vectors among a PRUNED scan's live delete entries
+    (r13): file-local vectors COMPOSE with zone-map pruning — a kept
+    file just applies its own bitmap — while equality/position delete
+    files raise (their visibility is cross-file, so a pruned read could
+    not apply them soundly without reading unpruned files)."""
+    dvs = [e for e in deletes if e["kind"] == "dv"]
+    if len(dvs) < len(deletes):
         raise ValueError(
             f"{verb} on a table with live equality/position delete files — "
             "run fold_deletes first (file-local deletion vectors compose)"
         )
-    return data, dvs
+    return dvs
+
+
+def _split_for_scan(man: dict, verb: str) -> tuple[list[dict], list[dict]]:
+    """(data entries, deletion vectors) of a full entry list for the
+    pruned-scan verbs — see ``_scan_dvs``."""
+    data, eqs, poss, dvs = _split_entries(man)
+    return data, _scan_dvs(eqs + poss + dvs, verb)
 
 
 def _plan_dvs(keep: list[dict], dvs: list[dict]) -> dict:
@@ -1366,36 +1376,15 @@ def _plan_dvs(keep: list[dict], dvs: list[dict]) -> dict:
 
 
 def plan_scan(table_dir: str, col: str, lo=None, hi=None) -> dict:
-    """Zone-map scan planning: keep every file whose [min,max] on ``col``
-    intersects the closed interval [lo, hi] (either bound may be None =
-    unbounded; all-null stats are conservatively kept). Returns the
-    pruned absolute path list plus the counts a plan test pins.
-
-    DELETION VECTORS (r13): live DVs compose — pruning runs over the
-    DATA entries and the plan carries the surviving files' vectors
-    (``dv_entries``) for the read to apply file-locally; eq/pos delete
-    files still raise (see ``_split_for_scan``)."""
-    manifest = read_manifest(table_dir)
-    data, dvs = _split_for_scan(manifest, "plan_scan/scan_range")
-    bounds = _decode_bounds(manifest, col)
-    keep, skipped = [], 0
-    for e in data:
-        b = bounds(e)
-        if b is not None and (
-            (hi is not None and b[0] > hi) or (lo is not None and b[1] < lo)
-        ):
-            skipped += 1
-            continue
-        keep.append(e)
-    return {
-        "paths": [os.path.join(table_dir, e["path"]) for e in keep],
-        "entries": keep,
-        **_plan_dvs(keep, dvs),
-        "planner": "driver",
-        "files_read": len(keep),
-        "files_skipped": skipped,
-        "files_total": len(data),
-    }
+    """Zone-map scan planning, driver-side: keep every file whose
+    [min,max] on ``col`` intersects the closed interval [lo, hi] (either
+    bound may be None = unbounded; all-null stats are conservatively
+    kept). A range is a one-column box — this is ``_plan_box`` over the
+    parsed JSON manifest; see it for the plan shape and the
+    deletion-vector rule."""
+    return _plan_box(
+        None, table_dir, read_manifest(table_dir), {col: (lo, hi)}, "plan_scan"
+    )
 
 
 def manifest_parquet_dir(table_dir: str, version: int) -> str:
@@ -1429,7 +1418,7 @@ def write_manifest_parquet(
     built once per version (idempotent — the dir is keyed by the
     immutable manifest number; a real format writes these at commit
     time, so the conversion cost is a fallback artifact, not part of the
-    model) and ``plan_scan_spark`` plans against it: from the
+    model) and ``_data_entries`` prunes against it: from the
     commit-time entry log for a full or external version, by a job over
     the base's table for a delta.
 
@@ -1566,93 +1555,6 @@ def _write_manifest_parquet_delta(
     return out
 
 
-def plan_scan_spark(
-    spark: SparkSession, table_dir: str, col: str, lo=None, hi=None
-) -> dict:
-    """Zone-map scan planning AS A SPARK JOB over the parquet manifest
-    table — the distributed half of two-level planning: the bounds
-    predicate (same closed-interval, null-conservative semantics as
-    ``plan_scan``, equivalence test-pinned) filters the manifest table
-    in parallel and only the SURVIVING paths come back to the driver —
-    a collect bounded by the answer size, the same bound the driver
-    planner's output already has.
-
-    The warm path never touches the JSON manifest: the live-delete
-    guard, total count and pruning all run off the parquet manifest
-    table (the JSON parse happens once, inside the first
-    ``write_manifest_parquet`` per version) — so this path's cost is
-    job overhead + a distributed filter, independent of driver-side
-    manifest size. The returned dict carries ``entries: None`` (driver
-    entry dicts are exactly what this regime avoids materializing);
-    SCALE.md §Round-11 records the measured crossover vs the driver
-    loop, which ``plan_scan_auto``'s threshold encodes."""
-    version = current_manifest_version(table_dir)
-    pdir = write_manifest_parquet(spark, table_dir, version)
-    mt = spark.read.parquet(pdir)
-    if f"min_{col}" not in mt.columns:
-        raise ValueError(f"no bounds for column {col!r} in the manifest spec")
-    cond = F.lit(True)
-    if hi is not None:
-        cond = cond & (F.col(f"min_{col}").isNull() | (F.col(f"min_{col}") <= F.lit(hi)))
-    if lo is not None:
-        cond = cond & (F.col(f"max_{col}").isNull() | (F.col(f"max_{col}") >= F.lit(lo)))
-    return _spark_plan_finish(table_dir, mt, cond, "plan_scan_spark")
-
-
-def _spark_plan_finish(table_dir: str, mt: DataFrame, cond: Column, verb: str) -> dict:
-    """Shared tail of the job planners: totals + surviving (path, seq,
-    rows) under the pruning predicate, DATA entries only. Live deletion
-    vectors compose (r13): dv entries come back as one narrow row per
-    dv'd file (answer-scale) and ride the plan as ``dv_entries`` with
-    the summed target rows (``dvd_rows`` — the broadcast-valve input),
-    so the read applies them without ever parsing the JSON manifest;
-    eq/pos delete files raise exactly like the driver planner."""
-    totals = mt.agg(
-        F.count_if(F.col("kind") == "data").alias("n"),
-        F.count_if(F.col("kind").isin("eqdelete", "posdelete")).alias("n_eqpos"),
-        F.count_if(F.col("kind") == "dv").alias("n_dv"),
-        F.count_if((F.col("kind") == "data") & cond).alias("n_keep"),
-    ).collect()[0]
-    if totals["n_eqpos"]:
-        raise ValueError(
-            f"{verb} on a table with live equality/position delete files — "
-            "run fold_deletes first (file-local deletion vectors compose)"
-        )
-    kept = sorted(
-        (r["path"], r["seq"], r["n_rows"])
-        for r in mt.filter((F.col("kind") == "data") & cond)
-        .select("path", "seq", "n_rows")
-        .collect()
-    )
-    dv_entries: list[dict] = []
-    dvd_rows = 0
-    if totals["n_dv"]:
-        kept_names = {os.path.basename(p) for p, _s, _r in kept}
-        dv_entries = [
-            {"path": r["path"], "kind": "dv", "target": r["target"], "rows": r["n_rows"]}
-            for r in sorted(
-                mt.filter(F.col("kind") == "dv")
-                .select("path", "target", "n_rows")
-                .collect(),  # bounded: one row per dv'd file
-                key=lambda r: (r["path"], r["target"]),
-            )
-            if r["target"] in kept_names
-        ]
-        targets = {d["target"] for d in dv_entries}
-        dvd_rows = sum(r for p, _s, r in kept if os.path.basename(p) in targets)
-    return {
-        "paths": [os.path.join(table_dir, p) for p, _s, _r in kept],
-        "entries": None,  # see docstring: the job path returns paths only
-        "path_seqs": [(p, s) for p, s, _r in kept],  # for schema resolution
-        "dv_entries": dv_entries,
-        "dvd_rows": dvd_rows,
-        "planner": "spark",
-        "files_read": totals["n_keep"],
-        "files_skipped": totals["n"] - totals["n_keep"],
-        "files_total": totals["n"],
-    }
-
-
 #: above this many manifest entries the pruning loop moves off the
 #: driver. Measured (SCALE.md §Round-11, local[32]): the driver path is
 #: LINEAR in manifest size (0.34 s at 100k entries / 16.7 MB JSON,
@@ -1663,40 +1565,15 @@ def _spark_plan_finish(table_dir: str, mt: DataFrame, cond: Column, verb: str) -
 PLAN_SPARK_THRESHOLD = 200_000
 
 
-def plan_scan_box_spark(spark: SparkSession, table_dir: str, preds: dict) -> dict:
-    """Multi-column (box) zone-map planning as a Spark job — the
-    distributed twin of ``plan_scan_box`` with the same
-    keep-unless-provably-disjoint semantics per dimension, conjoined.
-    Same warm-path contract as ``plan_scan_spark``: no JSON parse, no
-    driver entry dicts, collect bounded by the surviving-path count."""
-    version = current_manifest_version(table_dir)
-    pdir = write_manifest_parquet(spark, table_dir, version)
-    mt = spark.read.parquet(pdir)
-    cond = F.lit(True)
-    for c, (lo, hi) in preds.items():
-        if f"min_{c}" not in mt.columns:
-            raise ValueError(f"no bounds for column {c!r} in the manifest spec")
-        if hi is not None:
-            cond = cond & (F.col(f"min_{c}").isNull() | (F.col(f"min_{c}") <= F.lit(hi)))
-        if lo is not None:
-            cond = cond & (F.col(f"max_{c}").isNull() | (F.col(f"max_{c}") >= F.lit(lo)))
-    return _spark_plan_finish(table_dir, mt, cond, "plan_scan_box_spark")
-
-
-def _over_plan_threshold(
-    table_dir: str, threshold: int | None, version: int | None = None
-) -> bool:
-    """The dispatch probe: the version's entry count from its O(schema)
+def _over_plan_threshold(table_dir: str, version: int | None = None) -> bool:
+    """The regime probe: the version's entry count from its O(schema)
     header (``n_entries``, recorded by every commit) — parsing the JSON
-    to count entries would pay exactly the cost the dispatch exists to
-    avoid. ``threshold=None`` reads the module-level
-    PLAN_SPARK_THRESHOLD at call time (monkeypatchable — the routing pin
-    in test_filetable forces the job path this way)."""
-    if threshold is None:
-        threshold = PLAN_SPARK_THRESHOLD
+    to count entries would pay exactly the cost the two regimes exist to
+    avoid. PLAN_SPARK_THRESHOLD is read at call time (monkeypatchable —
+    the routing pins in test_filetable force the job regime this way)."""
     if version is None:
         version = current_manifest_version(table_dir)
-    return read_manifest_header(table_dir, version)["n_entries"] > threshold
+    return read_manifest_header(table_dir, version)["n_entries"] > PLAN_SPARK_THRESHOLD
 
 
 def _manifest_auto(
@@ -1712,7 +1589,7 @@ def _manifest_auto(
     parse-and-hold."""
     if version is None:
         version = current_manifest_version(table_dir)
-    if not _over_plan_threshold(table_dir, None, version):
+    if not _over_plan_threshold(table_dir, version):
         return read_manifest(table_dir, version)
     mt = spark.read.parquet(write_manifest_parquet(spark, table_dir, version))
     cols = ["path", "kind", "seq", "n_rows", "n_bytes", "key_cols", "target", "bucket"]
@@ -1732,55 +1609,142 @@ def _manifest_auto(
     return {**read_manifest_header(table_dir, version), "entries": entries}
 
 
-def plan_scan_auto(
-    spark: SparkSession,
+def _live_deletes(
+    spark: SparkSession | None, table_dir: str, man: dict
+) -> tuple[int, list[dict]]:
+    """(live DATA-file count, live delete entries) of a ``_manifest_view``
+    in either regime. Past the threshold the delete entries are one
+    narrow collect over the parquet manifest table (bounded: one row per
+    delete file) and the data count falls out of the header's exact
+    ``n_entries`` — no entry dicts for data files, no JSON parse."""
+    if man["entries"] is not None:
+        deletes = [e for e in man["entries"] if e.get("kind", "data") != "data"]
+        return len(man["entries"]) - len(deletes), deletes
+    deletes = _mt_entries(spark, table_dir, man["version"], F.col("kind") != "data")
+    return man["n_entries"] - len(deletes), deletes
+
+
+def _require_no_live_deletes(
+    spark: SparkSession | None, table_dir: str, man: dict, verb: str
+) -> int:
+    """Copy-on-write verbs and index builds operate at DATA-file grain; a
+    live equality delete would make them serve (or bake in) deleted rows
+    — fold_deletes first. Iceberg's rewrite actions apply live deletes
+    inline; requiring an explicit fold is this layer's documented
+    boundary, and the bloom index's manifest-version stamp catches the
+    reverse order (delete landing after a build). Returns the DATA-file
+    count — the write verbs' untouched-count bookkeeping needs it."""
+    n_data, deletes = _live_deletes(spark, table_dir, man)
+    if deletes:
+        raise ValueError(
+            f"{verb} on a table with live delete files — run fold_deletes first"
+        )
+    return n_data
+
+
+def _data_entries(
+    spark: SparkSession | None,
     table_dir: str,
-    col: str,
-    lo=None,
-    hi=None,
+    man: dict,
     *,
-    threshold: int | None = None,
-) -> dict:
-    """Two-level planning dispatch: small manifests prune driver-side
-    (``plan_scan`` — O(#files) metadata, no job overhead), large ones as
-    a Spark job (``plan_scan_spark``). Both return the identical file
-    set (test-pinned), so callers never see which side planned; the
-    returned ``planner`` key records which did. As of r12 this IS the
-    default planning path — ``scan_range`` routes through it (VERDICT
-    r11 item 3), so past the threshold the public read API plans as a
-    job with no O(#files) JSON parse on the warm path."""
-    if not _over_plan_threshold(table_dir, threshold):
-        return plan_scan(table_dir, col, lo, hi)
-    return plan_scan_spark(spark, table_dir, col, lo, hi)
+    preds: dict | None = None,
+    paths: set[str] | None = None,
+) -> list[dict]:
+    """The DATA entries of a ``_manifest_view`` inside the zone-map box
+    ``preds`` (``{col: (lo, hi)}``; ``{}`` is every data file) or in the
+    set of manifest-relative ``paths`` — the one entry fetch every verb
+    uses, in either regime.
+
+    The box rule is Iceberg's manifest pruning: keep a file unless SOME
+    predicate column's [min,max] is provably disjoint from its closed
+    [lo, hi] (either side may be None = unbounded; missing bounds keep).
+    Under the threshold it runs as a Python predicate over the decoded
+    bounds and returns the full entry dicts in manifest order; past it,
+    as the same condition over ``min_<c>``/``max_<c>`` of the parquet
+    manifest table (VERDICT r10 item 4 — Dremel's metadata-as-data) and
+    returns ``_mt_entries`` narrow dicts, a collect bounded by the
+    answer."""
+    for c in preds or {}:
+        if c not in man["stats_types"]:
+            raise ValueError(f"no bounds for column {c!r} in the manifest spec")
+    if man["entries"] is not None:
+        if paths is not None:
+            def inside(e):
+                return e["path"] in paths
+        else:
+            decoders = {c: _decode_bounds(man, c) for c in preds}
+
+            def inside(e):
+                for c, (lo, hi) in preds.items():
+                    b = decoders[c](e)
+                    if b is not None and (
+                        (hi is not None and b[0] > hi) or (lo is not None and b[1] < lo)
+                    ):
+                        return False
+                return True
+
+        return [
+            e for e in man["entries"] if e.get("kind", "data") == "data" and inside(e)
+        ]
+    if paths is not None:
+        if not paths:
+            return []
+        cond = F.col("path").isin(sorted(paths))
+    else:
+        cond = F.lit(True)
+        for c, (lo, hi) in preds.items():
+            mn, mx = F.col(f"min_{c}"), F.col(f"max_{c}")
+            if hi is not None:
+                cond = cond & (mn.isNull() | (mn <= F.lit(hi)))
+            if lo is not None:
+                cond = cond & (mx.isNull() | (mx >= F.lit(lo)))
+    return _mt_entries(spark, table_dir, man["version"], (F.col("kind") == "data") & cond)
 
 
-def plan_scan_box_auto(
-    spark: SparkSession, table_dir: str, preds: dict, *, threshold: int | None = None
+def _plan_box(
+    spark: SparkSession | None, table_dir: str, man: dict, preds: dict, verb: str
 ) -> dict:
-    """Two-level dispatch for multi-column (box) planning — the
-    ``scan_box`` twin of ``plan_scan_auto``."""
-    if not _over_plan_threshold(table_dir, threshold):
-        return plan_scan_box(table_dir, preds)
-    return plan_scan_box_spark(spark, table_dir, preds)
+    """Zone-map scan planning over a ``_manifest_view`` — the one planner
+    behind ``plan_scan``/``plan_scan_box`` (driver-side, a parsed JSON
+    manifest) and ``scan_range``/``scan_box`` (either regime: past
+    PLAN_SPARK_THRESHOLD the pruning is a Spark job over the parquet
+    manifest table and the read resolves schema through the header —
+    the warm path of a million-file table never parses the JSON
+    manifest). The kept files are ``_data_entries``' box.
+
+    DELETION VECTORS (r13): live DVs compose with pruning — the plan
+    carries the surviving files' vectors (``dv_entries``) and their
+    targets' summed rows (``dvd_rows``, the broadcast-valve input) for
+    the read to apply file-locally; equality/position delete files raise
+    (``_scan_dvs``).
+
+    Returns ``paths`` (absolute), ``entries`` (full dicts under the
+    threshold, narrow ones past it), ``dv_entries``, ``dvd_rows``, the
+    file counters and the ``manifest`` planned from."""
+    n_data, deletes = _live_deletes(spark, table_dir, man)
+    dvs = _scan_dvs(deletes, verb)
+    keep = _data_entries(spark, table_dir, man, preds=preds)
+    return {
+        "paths": [os.path.join(table_dir, e["path"]) for e in keep],
+        "entries": keep,
+        **_plan_dvs(keep, dvs),
+        "manifest": man,
+        "files_read": len(keep),
+        "files_skipped": n_data - len(keep),
+        "files_total": n_data,
+    }
 
 
 def _read_planned(spark: SparkSession, table_dir: str, plan: dict) -> DataFrame:
-    """Read a plan's surviving files with schema resolution, off EITHER
-    planner's output: the driver plan carries full entry dicts; the job
-    plan carries (path, seq) pairs and resolves the schema through the
-    O(schema) header sidecar — never the O(#files) JSON manifest.
+    """Read a plan's surviving files with schema resolution against the
+    manifest the plan was made from (the full manifest or, past the
+    threshold, the O(schema) header) — one manifest read per scan.
 
     DELETION VECTORS (r13): a plan carrying ``dv_entries`` applies each
     surviving dv'd file's bitmap file-locally (the _mor_read split: only
     dv'd files pay the probe, clean files stay a plain multi-path
     scan) — pruned scans compose with live DVs without a fold."""
-    if plan.get("entries") is not None:
-        man = read_manifest(table_dir)
-        entries = plan["entries"]
-    else:
-        man = read_manifest_header(table_dir)
-        entries = [{"path": p, "seq": s} for p, s in plan["path_seqs"]]
-    dvs = plan.get("dv_entries") or []
+    man, entries, dvs = plan["manifest"], plan["entries"], plan["dv_entries"]
     if not dvs:
         return _read_data(spark, table_dir, man, entries)
     targets = {d["target"] for d in dvs}
@@ -1788,52 +1752,20 @@ def _read_planned(spark: SparkSession, table_dir: str, plan: dict) -> DataFrame:
     clean = [e for e in entries if os.path.basename(e["path"]) not in targets]
     part = _read_data(spark, table_dir, man, dvd, meta_cols=True)
     part = _apply_dv_filter(
-        spark, table_dir, man, dvs, part, dvd_rows=plan.get("dvd_rows")
+        spark, table_dir, man, dvs, part, dvd_rows=plan["dvd_rows"]
     ).drop("_ft_file", "_ft_pos")
     if not clean:
         return part
     return _read_data(spark, table_dir, man, clean).unionByName(part)
 
 
-def _require_no_live_deletes(man: dict, verb: str) -> None:
-    """Copy-on-write verbs and index builds operate at DATA-file grain; a
-    live equality delete would make them serve (or bake in) deleted rows
-    — fold_deletes first. Iceberg's rewrite actions apply live deletes
-    inline; requiring an explicit fold is this layer's documented
-    boundary, and the bloom index's manifest-version stamp catches the
-    reverse order (delete landing after a build)."""
-    if any(e.get("kind", "data") != "data" for e in man["entries"]):
-        raise ValueError(
-            f"{verb} on a table with live delete files — run fold_deletes first"
-        )
-
-
-def _require_no_live_deletes_mt(
-    spark: SparkSession, table_dir: str, version: int, verb: str
-) -> int:
-    """The past-threshold twin of ``_require_no_live_deletes``: one
-    aggregate over the parquet manifest table (no entry dicts, no JSON
-    parse). Returns the DATA-file count — every caller needs it for its
-    untouched-count bookkeeping, so the one job serves both."""
-    mt = spark.read.parquet(write_manifest_parquet(spark, table_dir, version))
-    row = mt.agg(
-        F.count_if(F.col("kind") == "data").alias("n_data"),
-        F.count_if(F.col("kind") != "data").alias("n_other"),
-    ).collect()[0]
-    if row["n_other"]:
-        raise ValueError(
-            f"{verb} on a table with live delete files — run fold_deletes first"
-        )
-    return row["n_data"]
-
-
 def _mt_entries(
     spark: SparkSession, table_dir: str, version: int, cond: Column
 ) -> list[dict]:
     """Narrow entry dicts for a BOUNDED subset of the parquet manifest
-    table — the way a past-threshold write verb fetches exactly the
-    entries it touches (collect bounded by the subset size, the same
-    bound the rewrite itself has). stats/nulls are elided (the verbs
+    table — the way a past-threshold verb fetches exactly the entries it
+    touches (collect bounded by the subset size, the same bound the
+    read or rewrite itself has). stats/nulls are elided (the verbs
     need path/seq/rows/bytes/kind/target/key_cols/bucket); these dicts
     serve reads and summary arithmetic ONLY and must never be written
     back into a manifest — added entries always come fresh from
@@ -2396,7 +2328,7 @@ def delete_positions_dv(
     # r14: past the threshold the read side runs off the narrow
     # manifest-table entries (no JSON parse) and the commit below is a
     # manifest DELTA — O(touched vectors), never O(#files)
-    prev = _manifest_for_write(table_dir)
+    prev = _manifest_view(table_dir)
     man = (
         _manifest_auto(spark, table_dir, prev["version"])
         if prev["entries"] is None
@@ -2530,7 +2462,7 @@ def fold_deletes(spark: SparkSession, table_dir: str) -> dict:
     are eq/pos delete FILES, not data — every chain walker resolves
     removals by id against what actually exists (a path is never both),
     so the ambiguity is nominal."""
-    prev = _manifest_for_write(table_dir)
+    prev = _manifest_view(table_dir)
     man = (
         _manifest_auto(spark, table_dir, prev["version"])
         if prev["entries"] is None
@@ -2611,23 +2543,9 @@ def fold_deletes(spark: SparkSession, table_dir: str) -> dict:
 
 
 def scan_range(spark: SparkSession, table_dir: str, col: str, lo, hi) -> DataFrame:
-    """Pruned range scan: manifest skipping picks the files, and the same
-    predicate is applied on top (files straddle the bounds), reaching
-    the parquet scan as a pushed filter for row-group pruning.
-
-    Planning dispatches through ``plan_scan_auto`` (VERDICT r11 item 3):
-    under the threshold the driver loop plans as before; past it the
-    pruning runs as a Spark job over the parquet manifest table and the
-    read resolves schema via the header sidecar — the warm path of a
-    million-file table never parses the JSON manifest."""
-    plan = plan_scan_auto(spark, table_dir, col, lo, hi)
-    df = _read_planned(spark, table_dir, plan)
-    c = F.col(col)
-    if lo is not None:
-        df = df.filter(c >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(c <= F.lit(hi))
-    return df
+    """Pruned range scan — the one-column box: ``scan_box(spark,
+    table_dir, {col: (lo, hi)})``."""
+    return scan_box(spark, table_dir, {col: (lo, hi)})
 
 
 def _layout_write_kwargs(man: dict, *, cluster_by: str | None) -> dict:
@@ -2731,56 +2649,15 @@ def _classify_where_auto(
     spark: SparkSession, table_dir: str, manifest: dict, col: str, cutoff, mode: str
 ) -> dict:
     """Two-level dispatch for write-path candidate classification — the
-    delete/update twin of ``plan_scan_auto``. Past the threshold the
-    driver never decodes a single entry's bounds — and since r14 the
-    commit itself is a manifest DELTA (``_commit_update``), so the full
-    entry list is never composed either."""
-    if _over_plan_threshold(table_dir, None, manifest["version"]):
+    delete/update counterpart of ``_data_entries``' box rule. Past the
+    threshold the driver never decodes a single entry's bounds — and
+    since r14 the commit itself is a manifest DELTA (``_commit_update``),
+    so the full entry list is never composed either."""
+    if _over_plan_threshold(table_dir, manifest["version"]):
         return _classify_where_spark(
             spark, table_dir, manifest["version"], col, cutoff, mode
         )
     return _classify_where_driver(manifest, col, cutoff, mode)
-
-
-def _merge_candidates_driver(manifest: dict, tkey: str, s_lo, s_hi) -> set[str]:
-    """Data files whose key bounds intersect the source's key range —
-    MERGE planning step 1, driver-side."""
-    bounds = _decode_bounds(manifest, tkey)
-    out: set[str] = set()
-    for e in manifest["entries"]:
-        if e.get("kind", "data") != "data":
-            continue
-        b = bounds(e)
-        if b is None or (b[0] <= s_hi and b[1] >= s_lo):
-            out.add(e["path"])
-    return out
-
-
-def _merge_candidates_spark(
-    spark: SparkSession, table_dir: str, version: int, tkey: str, s_lo, s_hi
-) -> set[str]:
-    """MERGE candidate selection as a job over the parquet manifest
-    table — same keep-unless-provably-disjoint rule as the driver twin,
-    collect bounded by the candidate count (the files the merge must
-    read anyway)."""
-    pdir = write_manifest_parquet(spark, table_dir, version)
-    mt = spark.read.parquet(pdir)
-    mn, mx = F.col(f"min_{tkey}"), F.col(f"max_{tkey}")
-    cond = mn.isNull() | ((mn <= F.lit(s_hi)) & (mx >= F.lit(s_lo)))
-    rows = (
-        mt.filter((F.col("kind") == "data") & cond).select("path").collect()
-    )
-    return {r["path"] for r in rows}
-
-
-def _merge_candidates_auto(
-    spark: SparkSession, table_dir: str, manifest: dict, tkey: str, s_lo, s_hi
-) -> set[str]:
-    if _over_plan_threshold(table_dir, None, manifest["version"]):
-        return _merge_candidates_spark(
-            spark, table_dir, manifest["version"], tkey, s_lo, s_hi
-        )
-    return _merge_candidates_driver(manifest, tkey, s_lo, s_hi)
 
 
 def delete_where(spark: SparkSession, table_dir: str, col: str, cutoff) -> dict:
@@ -2809,35 +2686,18 @@ def delete_where(spark: SparkSession, table_dir: str, col: str, cutoff) -> dict:
     TWO-LEVEL (r13, VERDICT r12 item 2; r14, VERDICT r13 item 1):
     candidate classification dispatches through ``_classify_where_auto``
     — past the threshold the bounds arithmetic runs as a job over the
-    parquet manifest table — and the COMMIT is a manifest DELTA past the
+    parquet manifest table — the classified entries come back through
+    ``_data_entries``, and the COMMIT is a manifest DELTA past the
     threshold (``_commit_update``): the driver touches only the
     classified entries and the new ones; the full entry list is never
     composed (monkeypatch-explode pinned)."""
-    manifest = _manifest_for_write(table_dir)
-    if manifest["entries"] is not None:
-        _require_no_live_deletes(manifest, "delete_where")
-        n_data = None
-    else:
-        n_data = _require_no_live_deletes_mt(
-            spark, table_dir, manifest["version"], "delete_where"
-        )
+    manifest = _manifest_view(table_dir)
+    n_data = _require_no_live_deletes(spark, table_dir, manifest, "delete_where")
     cls = _classify_where_auto(spark, table_dir, manifest, col, cutoff, "delete")
-    if manifest["entries"] is not None:
-        dropped = [e for e in manifest["entries"] if cls.get(e["path"]) == "dropped"]
-        straddle = [e for e in manifest["entries"] if cls.get(e["path"]) == "straddle"]
-        n_kept = sum(1 for e in manifest["entries"] if e["path"] not in cls)
-    else:
-        touched = (
-            _mt_entries(
-                spark, table_dir, manifest["version"],
-                F.col("path").isin(list(cls)),
-            )
-            if cls
-            else []
-        )
-        dropped = [e for e in touched if cls.get(e["path"]) == "dropped"]
-        straddle = [e for e in touched if cls.get(e["path"]) == "straddle"]
-        n_kept = n_data - len(cls)
+    touched = _data_entries(spark, table_dir, manifest, paths=set(cls))
+    dropped = [e for e in touched if cls[e["path"]] == "dropped"]
+    straddle = [e for e in touched if cls[e["path"]] == "straddle"]
+    n_kept = n_data - len(cls)
     new_entries, rows_deleted, rows_kept = [], 0, 0
     if straddle:
         # schema-resolved read: straddlers written pre-evolution rewrite
@@ -2905,32 +2765,15 @@ def update_where(
     Scale: cost is O(files that can contain a match) — the zone maps
     bound the rewrite set exactly as for DELETE; everything above the
     cutoff survives untouched at any table size."""
-    manifest = _manifest_for_write(table_dir)
-    if manifest["entries"] is not None:
-        _require_no_live_deletes(manifest, "update_where")
-        n_data = None
-    else:
-        n_data = _require_no_live_deletes_mt(
-            spark, table_dir, manifest["version"], "update_where"
-        )
+    manifest = _manifest_view(table_dir)
+    n_data = _require_no_live_deletes(spark, table_dir, manifest, "update_where")
     unknown = set(set_exprs) - {f["name"] for f in manifest.get("schema", {}).get("fields", [])}
     if unknown:
         raise ValueError(f"SET columns not in schema: {sorted(unknown)}")
     # two-level classification (r13) + delta commit (r14): see delete_where
     cls = _classify_where_auto(spark, table_dir, manifest, col, cutoff, "update")
-    if manifest["entries"] is not None:
-        touched = [e for e in manifest["entries"] if e["path"] in cls]
-        n_kept = sum(1 for e in manifest["entries"] if e["path"] not in cls)
-    else:
-        touched = (
-            _mt_entries(
-                spark, table_dir, manifest["version"],
-                F.col("path").isin(list(cls)),
-            )
-            if cls
-            else []
-        )
-        n_kept = n_data - len(cls)
+    touched = _data_entries(spark, table_dir, manifest, paths=set(cls))
+    n_kept = n_data - len(cls)
     new_entries, rows_updated = [], 0
     if touched:
         src = _read_data(spark, table_dir, manifest, touched)
@@ -2990,9 +2833,10 @@ def merge_into(
     first, then WHEN MATCHED UPDATE SET, then WHEN NOT MATCHED INSERT.
 
     Planning is Iceberg's: (1) candidate files by key-bounds
-    intersection with the source's key range (manifest prune, driver-
-    side); (2) the files actually CONTAINING matches via one file-scoped
-    semi join (``input_file_name`` against the source keys); (3) only
+    intersection with the source's key range (the manifest prune of
+    ``_data_entries``, a job past the threshold); (2) the files actually
+    CONTAINING matches via one file-scoped semi join
+    (``input_file_name`` against the source keys); (3) only
     those files rewrite — each untouched file survives as a manifest
     entry, and rows whose keys appear in no candidate file are inserts
     by zone-map soundness. Duplicate source keys raise (the
@@ -3053,14 +2897,8 @@ def _merge_into_cow_checkpointed(
     when_not_matched_insert: dict[str, Column] | None,
 ) -> dict:
     tkey, skey = on
-    manifest = _manifest_for_write(table_dir)
-    if manifest["entries"] is not None:
-        _require_no_live_deletes(manifest, "merge_into")
-        n_data = None
-    else:
-        n_data = _require_no_live_deletes_mt(
-            spark, table_dir, manifest["version"], "merge_into"
-        )
+    manifest = _manifest_view(table_dir)
+    n_data = _require_no_live_deletes(spark, table_dir, manifest, "merge_into")
 
     dup = source.agg(
         F.count(skey).alias("n"), F.countDistinct(skey).alias("d")
@@ -3072,46 +2910,23 @@ def _merge_into_cow_checkpointed(
     srange = source.agg(F.min(skey).alias("lo"), F.max(skey).alias("hi")).collect()[0]
     s_lo, s_hi = srange["lo"], srange["hi"]
 
-    if tkey in manifest["stats_types"] and s_lo is not None:
-        # two-level classification (r13, VERDICT r12 item 2): past the
-        # threshold the bounds intersection runs as a manifest-table job
-        cand_paths = _merge_candidates_auto(
-            spark, table_dir, manifest, tkey, s_lo, s_hi
-        )
-    else:
-        # join key carries no manifest bounds (or empty source range):
-        # every data file is a candidate (conservative — the file-scoped
-        # semi join still limits the rewrite set to files actually
-        # holding matches; only the zone-map prune is lost). None marks
-        # the all-files case for the job path below.
-        cand_paths = (
-            None
-            if manifest["entries"] is None
-            else {e["path"] for e in manifest["entries"]}
-        )
-    if manifest["entries"] is not None:
-        candidates = [e for e in manifest["entries"] if e["path"] in cand_paths]
-        n_untouched = sum(
-            1 for e in manifest["entries"] if e["path"] not in cand_paths
-        )
-    else:
-        # collect bounded by the candidate count — the files the merge
-        # must read anyway (all of them only in the no-bounds case)
-        candidates = _mt_entries(
-            spark, table_dir, manifest["version"],
-            (F.col("kind") == "data")
-            if cand_paths is None
-            else F.col("path").isin(list(cand_paths)),
-        )
-        n_untouched = n_data - len(candidates)
-
-    touched_paths: list[str] = []
+    # candidates: the source key range as a zone-map box (two-level —
+    # past the threshold a manifest-table job, r13); with no bounds on
+    # the key (or an empty source) every data file is a candidate
+    # (conservative — the file-scoped semi join still limits the rewrite
+    # set to files actually holding matches; only the prune is lost)
+    box = (
+        {tkey: (s_lo, s_hi)}
+        if tkey in manifest["stats_types"] and s_lo is not None
+        else {}
+    )
+    candidates = _data_entries(spark, table_dir, manifest, preds=box)
+    # schema-resolved candidate read (input_file_name resolves through
+    # the per-seq projections — it is a scan attribute); with no
+    # candidates, an empty frame with the current schema
+    cand_df = _read_data(spark, table_dir, manifest, candidates)
     touched_entries: list[dict] = []
-    cand_df = None
     if candidates:
-        # schema-resolved candidate read (input_file_name resolves through
-        # the per-seq projections — it is a scan attribute)
-        cand_df = _read_data(spark, table_dir, manifest, candidates)
         touched = (
             cand_df.withColumn("_ft_file", F.input_file_name())
             .join(source.select(F.col(skey).alias(tkey)), tkey, "left_semi")
@@ -3120,20 +2935,15 @@ def _merge_into_cow_checkpointed(
             .collect()
         )  # bounded: one row per matched FILE
         touched_names = {os.path.basename(r["_ft_file"]) for r in touched}
-        n_untouched += sum(
-            1 for e in candidates if os.path.basename(e["path"]) not in touched_names
-        )
         touched_entries = [
             e for e in candidates if os.path.basename(e["path"]) in touched_names
         ]
-        touched_paths = [
-            os.path.join(table_dir, e["path"]) for e in touched_entries
-        ]
+    n_untouched = n_data - len(touched_entries)
 
-    target_cols = (cand_df or read_table(spark, table_dir)).columns
+    target_cols = cand_df.columns
     rows_deleted = 0
     out = None
-    if touched_paths:
+    if touched_entries:
         t = _read_data(spark, table_dir, manifest, touched_entries).alias("t")
         s = source.alias("s")
         joined = t.join(s, F.col(f"t.{tkey}") == F.col(f"s.{skey}"), "left")
@@ -3167,10 +2977,9 @@ def _merge_into_cow_checkpointed(
             )
         else:
             not_matched = source.alias("s")
+        dtypes = dict(cand_df.dtypes)
         insert_df = not_matched.select(
-            *[when_not_matched_insert[c].cast(dict(
-                (cand_df or read_table(spark, table_dir)).dtypes
-            )[c]).alias(c) for c in target_cols]
+            *[when_not_matched_insert[c].cast(dtypes[c]).alias(c) for c in target_cols]
         )
         out = insert_df if out is None else out.unionByName(insert_df)
 
@@ -3181,7 +2990,7 @@ def _merge_into_cow_checkpointed(
             spark,
             table_dir,
             list(manifest["stats_types"]),
-            n_files=max(1, len(touched_paths)) + (1 if insert_df is not None else 0),
+            n_files=max(1, len(touched_entries)) + (1 if insert_df is not None else 0),
             **_layout_write_kwargs(manifest, cluster_by=tkey),
         )
     rewritten_in = sum(e["rows"] for e in touched_entries)
@@ -3190,11 +2999,11 @@ def _merge_into_cow_checkpointed(
     # (only when both clauses ran — otherwise the file stats suffice),
     # then deletes fall out of the collected per-file row counts
     if insert_df is not None:
-        n_inserted = insert_df.count() if touched_paths else total_out
+        n_inserted = insert_df.count() if touched_entries else total_out
     rows_deleted = rewritten_in - (total_out - n_inserted)
     summary = {
         "files_candidates": len(candidates),
-        "files_rewritten": len(touched_paths),
+        "files_rewritten": len(touched_entries),
         "files_untouched": n_untouched,
         "rows_deleted": rows_deleted,
         "rows_inserted": n_inserted,
@@ -3286,18 +3095,10 @@ def _merge_into_mor_checkpointed(
     when_not_matched_insert: dict[str, Column] | None,
 ) -> dict:
     tkey, skey = on
-    manifest = _manifest_for_write(table_dir)
-    if manifest["entries"] is not None:
-        delete_entries = [
-            e for e in manifest["entries"] if e.get("kind", "data") != "data"
-        ]
-    else:
-        # bounded: one narrow row per live DELETE entry (answer-scale —
-        # the MOR read needs each of them anyway); the data side is
-        # never collected unless it is the candidate set itself
-        delete_entries = _mt_entries(
-            spark, table_dir, manifest["version"], F.col("kind") != "data"
-        )
+    manifest = _manifest_view(table_dir)
+    # every live delete entry (the MOR read needs each of them); the
+    # data side is fetched only for the candidate box below
+    _n_data, delete_entries = _live_deletes(spark, table_dir, manifest)
     eqs = [e for e in delete_entries if e.get("kind") == "eqdelete"]
     if eqs:
         live_keys = _eq_key_cols(eqs)
@@ -3316,35 +3117,14 @@ def _merge_into_mor_checkpointed(
     srange = source.agg(F.min(skey).alias("lo"), F.max(skey).alias("hi")).collect()[0]
     s_lo, s_hi = srange["lo"], srange["hi"]
 
-    if tkey in manifest["stats_types"] and s_lo is not None:
-        # two-level classification (r13): the bounds intersection runs as
-        # a manifest-table job past the threshold, like the CoW twin
-        cand_paths = _merge_candidates_auto(
-            spark, table_dir, manifest, tkey, s_lo, s_hi
-        )
-    else:
-        # join key carries no manifest bounds (or empty source range):
-        # every data file is a candidate (conservative — the file-scoped
-        # matching still bounds the delete set; only the prune is lost)
-        cand_paths = (
-            None
-            if manifest["entries"] is None
-            else {
-                e["path"]
-                for e in manifest["entries"]
-                if e.get("kind", "data") == "data"
-            }
-        )
-    if manifest["entries"] is not None:
-        data, *_rest = _split_entries(manifest)
-        candidates = [e for e in data if e["path"] in cand_paths]
-    else:
-        candidates = _mt_entries(
-            spark, table_dir, manifest["version"],
-            (F.col("kind") == "data")
-            if cand_paths is None
-            else ((F.col("kind") == "data") & F.col("path").isin(list(cand_paths))),
-        )
+    # candidates as in the CoW twin: the source key range as a box, or
+    # every data file when the key has no bounds (or the source is empty)
+    box = (
+        {tkey: (s_lo, s_hi)}
+        if tkey in manifest["stats_types"] and s_lo is not None
+        else {}
+    )
+    candidates = _data_entries(spark, table_dir, manifest, preds=box)
     # the VISIBLE rows of candidate files only: restrict the data side,
     # keep every delete entry so MOR application stays exact
     man_cand = {**manifest, "entries": candidates + delete_entries}
@@ -3494,7 +3274,7 @@ def build_bloom_index(
     rows), then a bounded collect packs each file's bitmap driver-side.
     Sidecar size is files × bits/8 bytes."""
     man = read_manifest(table_dir)
-    _require_no_live_deletes(man, "build_bloom_index")
+    _require_no_live_deletes(spark, table_dir, man, "build_bloom_index")
     # Portable-hash whitelist (ADVICE r10): the driver-side probe hashes
     # Python ``str(value)`` and must reproduce Spark's CAST(col AS
     # STRING) bit-for-bit; for float/double/decimal the renderings
@@ -3624,47 +3404,18 @@ def plan_bloom_lookup(
 def point_lookup(spark: SparkSession, table_dir: str, col: str, values) -> DataFrame:
     """Bloom-pruned point lookup: only files whose bloom admits some probe
     value are read; the exact IN-list filter on top removes bloom false
-    positives and pushes into the parquet scan. Live deletion vectors
-    compose (r13): the plan carries the kept files' vectors and the
-    read applies them file-locally (``_read_planned``), so a key
-    deleted by a DV commit correctly returns no row WITHOUT a rebuild
-    or a fold."""
+    positives and pushes into the parquet scan. The kept files' entries
+    come from ``_data_entries`` (past the threshold a bounded job over
+    the parquet manifest table, schema from the header — no JSON parse).
+    Live deletion vectors compose (r13): the plan carries the kept
+    files' vectors and the read applies them file-locally
+    (``_read_planned``), so a key deleted by a DV commit correctly
+    returns no row WITHOUT a rebuild or a fold."""
     plan = plan_bloom_lookup(table_dir, col, values, spark=spark)
-    if not plan["paths"]:
-        empty = read_table(spark, table_dir).limit(0)
-        return empty.filter(F.col(col).isin(list(values)))
-    kept = set(plan["paths"])
-    if not _over_plan_threshold(table_dir, None):
-        man = read_manifest(table_dir)
-        entries = [
-            e
-            for e in man["entries"]
-            if e.get("kind", "data") == "data"
-            and os.path.join(table_dir, e["path"]) in kept
-        ]
-        rplan = {"entries": entries, **{k: plan[k] for k in ("dv_entries", "dvd_rows")}}
-        return _read_planned(spark, table_dir, rplan).filter(
-            F.col(col).isin(list(values))
-        )
-    # large-manifest path: (path, seq) for the bloom-kept files via the
-    # parquet manifest table + header-sidecar schema resolution — no
-    # JSON manifest parse (collect bounded by the bloom hit count)
-    pdir = write_manifest_parquet(spark, table_dir)
-    rel_kept = sorted(os.path.relpath(p, table_dir) for p in kept)
-    rows = (
-        spark.read.parquet(pdir)
-        .filter((F.col("kind") == "data") & F.col("path").isin(rel_kept))
-        .select("path", "seq")
-        .collect()
-    )
-    rplan = {
-        "entries": None,
-        "path_seqs": [(r["path"], r["seq"]) for r in rows],
-        **{k: plan[k] for k in ("dv_entries", "dvd_rows")},
-    }
-    return _read_planned(spark, table_dir, rplan).filter(
-        F.col(col).isin(list(values))
-    )
+    man = _manifest_view(table_dir)
+    kept = {os.path.relpath(p, table_dir) for p in plan["paths"]}
+    plan.update(manifest=man, entries=_data_entries(spark, table_dir, man, paths=kept))
+    return _read_planned(spark, table_dir, plan).filter(F.col(col).isin(list(values)))
 
 
 def _binpack_entries(
@@ -3731,7 +3482,7 @@ def compact_table(spark: SparkSession, table_dir: str, *, target_bytes: int) -> 
     commit is a manifest DELTA like the other write verbs. A
     million-file table's compaction therefore never decodes a single
     untouched entry driver-side."""
-    prev = _manifest_for_write(table_dir)
+    prev = _manifest_view(table_dir)
     man = prev
     if prev["entries"] is not None:
         _data, dvs = _split_for_scan(prev, "compaction")
@@ -4521,49 +4272,23 @@ def changelog_table(
 
 
 def plan_scan_box(table_dir: str, preds: dict) -> dict:
-    """Multi-column zone-map planning: keep a file unless SOME predicate
-    column's [min,max] is disjoint from its [lo,hi] interval (either
-    side of an interval may be None = unbounded; missing bounds for a
-    column are conservative). The payoff column layout is a z-order
-    rewrite (``rewrite_layout`` with a Morton key): every predicate
-    column's per-file bounds are tight simultaneously, so a BOX probe
-    prunes on all dimensions — the executed form of what
-    layout_zorder_lab measures. Live deletion vectors compose (r13 —
-    see ``_split_for_scan``); eq/pos delete files raise."""
-    man = read_manifest(table_dir)
-    data, dvs = _split_for_scan(man, "plan_scan_box")
-    decoders = {c: _decode_bounds(man, c) for c in preds}
-    keep, skipped = [], 0
-    for e in data:
-        drop = False
-        for c, (lo, hi) in preds.items():
-            b = decoders[c](e)
-            if b is not None and (
-                (hi is not None and b[0] > hi) or (lo is not None and b[1] < lo)
-            ):
-                drop = True
-                break
-        if drop:
-            skipped += 1
-        else:
-            keep.append(e)
-    return {
-        "paths": [os.path.join(table_dir, e["path"]) for e in keep],
-        "entries": keep,
-        **_plan_dvs(keep, dvs),
-        "planner": "driver",
-        "files_read": len(keep),
-        "files_skipped": skipped,
-        "files_total": len(data),
-    }
+    """Multi-column zone-map planning, driver-side: keep a file unless
+    SOME predicate column's [min,max] is disjoint from its [lo,hi]
+    interval — ``_plan_box`` over the parsed JSON manifest. The payoff
+    column layout is a z-order rewrite (``rewrite_layout`` with a Morton
+    key): every predicate column's per-file bounds are tight
+    simultaneously, so a BOX probe prunes on all dimensions — the
+    executed form of what layout_zorder_lab measures."""
+    return _plan_box(None, table_dir, read_manifest(table_dir), preds, "plan_scan_box")
 
 
 def scan_box(spark: SparkSession, table_dir: str, preds: dict) -> DataFrame:
-    """Pruned box scan: ``plan_scan_box_auto`` picks the files (driver
-    loop under the threshold, Spark job over the parquet manifest table
-    past it — VERDICT r11 item 3), the same literal conjunction applies
-    on top (pushed into parquet)."""
-    plan = plan_scan_box_auto(spark, table_dir, preds)
+    """Pruned box scan: ``_plan_box`` picks the files (driver loop under
+    the threshold, Spark job over the parquet manifest table past it —
+    VERDICT r11 item 3) and the same literal conjunction applies on top,
+    reaching the parquet scan as pushed filters for row-group pruning
+    (files straddle the bounds)."""
+    plan = _plan_box(spark, table_dir, _manifest_view(table_dir), preds, "scan_box")
     df = _read_planned(spark, table_dir, plan)
     for c, (lo, hi) in preds.items():
         if lo is not None:
@@ -4644,7 +4369,7 @@ def fold_pressure(
     Past ``PLAN_SPARK_THRESHOLD`` (and given ``spark``) the sums run as
     one aggregate over the parquet manifest table instead of a
     driver-side entry loop (VERDICT r12 item 2)."""
-    if spark is not None and _over_plan_threshold(table_dir, None):
+    if spark is not None and _over_plan_threshold(table_dir):
         pdir = write_manifest_parquet(spark, table_dir)
         r = spark.read.parquet(pdir).agg(
             F.sum(F.when(F.col("kind") == "data", F.col("n_rows")).otherwise(0)).alias("dr"),
@@ -4841,29 +4566,33 @@ def fast_forward_table(table_dir: str, branch: str) -> int:
 
 def tag_snapshot(table_dir: str, name: str, version: int | None = None) -> int:
     """Immutable named tag on a manifest version (Iceberg tag refs):
-    re-tagging an existing
-    name raises; ``expire_table`` keeps every tagged version alive
-    (per-ref retention)."""
-    if version is None:
-        version = current_manifest_version(table_dir)
-    if not os.path.exists(_manifest_path(table_dir, version)):
-        raise ValueError(f"no manifest version {version} to tag")
-    refs = _read_refs(table_dir)
-    if name in refs:
-        raise ValueError(f"tag {name!r} already exists (tags are immutable)")
-    refs[name] = version
-    tmp = f"{_refs_path(table_dir)}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(refs, f)
-    os.replace(tmp, _refs_path(table_dir))
-    return version
+    re-tagging an existing name raises; ``expire_table`` keeps every
+    tagged version alive (per-ref retention). Runs under the commit lock
+    like the branch verbs, so a tag can never land on a version an
+    expiry is removing."""
+    with _commit_lock(table_dir):
+        if version is None:
+            version = current_manifest_version(table_dir)
+        if not os.path.exists(_manifest_path(table_dir, version)):
+            raise ValueError(f"no manifest version {version} to tag")
+        refs = _read_refs(table_dir)
+        if name in refs:
+            raise ValueError(f"tag {name!r} already exists (tags are immutable)")
+        refs[name] = version
+        _write_refs(table_dir, refs)
+        return version
 
 
 def drop_tag(table_dir: str, name: str) -> None:
-    refs = _read_refs(table_dir)
-    if name not in refs:
-        raise ValueError(f"no tag {name!r}")
-    del refs[name]
+    with _commit_lock(table_dir):
+        refs = _read_refs(table_dir)
+        if name not in refs:
+            raise ValueError(f"no tag {name!r}")
+        del refs[name]
+        _write_refs(table_dir, refs)
+
+
+def _write_refs(table_dir: str, refs: dict) -> None:
     tmp = f"{_refs_path(table_dir)}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
         json.dump(refs, f)
@@ -5222,8 +4951,8 @@ def _referenced_paths_spark(
     spark: SparkSession, table_dir: str, versions: list[int]
 ) -> set[str]:
     """The same union as a SPARK JOB over the commit-time JSONL entry
-    logs (VERDICT r12 item 4 — the write-path twin of plan_scan_spark):
-    one path-schema'd JSON scan over every retained version's log, one
+    logs (VERDICT r12 item 4 — the expiry twin of the scan planner's
+    job regime): one path-schema'd JSON scan over every retained version's log, one
     distributed ``distinct``, and only the deduplicated path set comes
     back — the driver never parses a retained version's O(#files) JSON
     manifest. Delta versions have no full log and need none: their
@@ -5444,61 +5173,67 @@ def expire_table(
     MATERIALIZED (converted in place to external-full by streaming the
     chain into its own entry log — ``_materialize_version``). Expiry is
     the rare maintenance event, so the amortized O(#files) stream lands
-    exactly where Iceberg pays its manifest rewrite."""
-    versions = _manifest_versions(table_dir)
-    current = current_manifest_version(table_dir)
-    keep = (
-        set(versions[-keep_last:])
-        | {current}
-        | set(_read_refs(table_dir).values())
-        # keep branch heads AND bases: the base anchors the ancestry
-        # check fast_forward_table runs, so expiring it would turn a
-        # publishable branch into a false conflict
-        | {r["head"] for r in _read_branches(table_dir).values()}
-        | {r["base"] for r in _read_branches(table_dir).values()}
-    )
-    for v in sorted(keep):
-        if v not in versions:
-            continue
-        form, base = _manifest_form(table_dir, v)
-        if form != "delta":
-            continue
-        chain_ok = True
-        link = base
-        while True:
-            if link not in keep:
-                chain_ok = False
-                break
-            lform, lbase = _manifest_form(table_dir, link)
-            if lform != "delta":
-                break
-            link = lbase
-        if not chain_ok:
-            _materialize_version(table_dir, v)
-    removed_manifests = []
-    referenced = _referenced_paths_auto(
-        spark, table_dir, [v for v in versions if v in keep]
-    )
-    # Reclaim only files that a removed manifest references and no
-    # survivor does, taken while every version is still on disk (each
-    # delta's base is, so the chain-aware union holds). A file no
-    # manifest references yet may belong to a commit in flight: such
-    # debris is gc_orphans' job, under the commit lock and grace window.
-    unreferenced = _referenced_paths_auto(spark, table_dir, versions) - referenced
-    import shutil
+    exactly where Iceberg pays its manifest rewrite.
 
-    for v in versions:
-        if v not in keep:
-            os.remove(_manifest_path(table_dir, v))
-            # the commit-time sidecars and any materialized parquet
-            # manifest table expire with their version
-            for p in (_header_path(table_dir, v), _entries_jsonl_path(table_dir, v)):
-                try:
-                    os.remove(p)
-                except FileNotFoundError:
-                    pass
-            shutil.rmtree(manifest_parquet_dir(table_dir, v), ignore_errors=True)
-            removed_manifests.append(v)
+    The commit lock is held from the keep-set read through manifest
+    removal: a tag or branch placed concurrently would otherwise pin a
+    version this expiry removes (ADVICE r10's ref race, expiry side).
+    Nothing called under it takes the lock."""
+    with _commit_lock(table_dir):
+        versions = _manifest_versions(table_dir)
+        current = current_manifest_version(table_dir)
+        keep = (
+            set(versions[-keep_last:])
+            | {current}
+            | set(_read_refs(table_dir).values())
+            # keep branch heads AND bases: the base anchors the ancestry
+            # check fast_forward_table runs, so expiring it would turn a
+            # publishable branch into a false conflict
+            | {r["head"] for r in _read_branches(table_dir).values()}
+            | {r["base"] for r in _read_branches(table_dir).values()}
+        )
+        for v in sorted(keep):
+            if v not in versions:
+                continue
+            form, base = _manifest_form(table_dir, v)
+            if form != "delta":
+                continue
+            chain_ok = True
+            link = base
+            while True:
+                if link not in keep:
+                    chain_ok = False
+                    break
+                lform, lbase = _manifest_form(table_dir, link)
+                if lform != "delta":
+                    break
+                link = lbase
+            if not chain_ok:
+                _materialize_version(table_dir, v)
+        removed_manifests = []
+        referenced = _referenced_paths_auto(
+            spark, table_dir, [v for v in versions if v in keep]
+        )
+        # Reclaim only files that a removed manifest references and no
+        # survivor does, taken while every version is still on disk (each
+        # delta's base is, so the chain-aware union holds). A file no
+        # manifest references yet may belong to a commit in flight: such
+        # debris is gc_orphans' job, under the commit lock and grace window.
+        unreferenced = _referenced_paths_auto(spark, table_dir, versions) - referenced
+        import shutil
+
+        for v in versions:
+            if v not in keep:
+                os.remove(_manifest_path(table_dir, v))
+                # the commit-time sidecars and any materialized parquet
+                # manifest table expire with their version
+                for p in (_header_path(table_dir, v), _entries_jsonl_path(table_dir, v)):
+                    try:
+                        os.remove(p)
+                    except FileNotFoundError:
+                        pass
+                shutil.rmtree(manifest_parquet_dir(table_dir, v), ignore_errors=True)
+                removed_manifests.append(v)
     removed_files = 0
     for rel in unreferenced:
         if rel.startswith("data" + os.sep) and rel.endswith(".parquet"):

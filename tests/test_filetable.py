@@ -557,6 +557,40 @@ def test_tagged_snapshot_survives_expiry(spark, li_table):
         ft.read_table(spark, td, version=1)
 
 
+@pytest.mark.parametrize("verb", ["tag_snapshot", "drop_tag", "expire_table"])
+def test_ref_writes_and_expiry_take_the_commit_lock(tmp_path, verb):
+    """A tag placed while an expiry runs must never point at a manifest
+    the expiry removes: both tag verbs and expire_table (keep-set read
+    through manifest removal) run under the commit lock. While the lock
+    is held elsewhere the verb cannot finish; once released, it does."""
+    import threading
+
+    entries = [{"path": "data/c000001/a.parquet", "rows": 1, "bytes": 10,
+                "seq": 1, "stats": {"k": [0, 1]}}]
+    td = _plant_manifest(tmp_path, entries, {"k": "long"})
+    man = {"operation": "append", "stats_types": {"k": "long"}, "summary": {},
+           "entries": entries}
+    assert ft._commit_manifest(td, man, base_version=1) == 2
+    if verb == "drop_tag":
+        ft.tag_snapshot(td, "t", 2)
+    run = {
+        "tag_snapshot": lambda: ft.tag_snapshot(td, "t", 1),
+        "drop_tag": lambda: ft.drop_tag(td, "t"),
+        "expire_table": lambda: ft.expire_table(td, keep_last=1),
+    }[verb]
+    res = {}
+    t = threading.Thread(target=lambda: res.update(out=run()))
+    with ft._commit_lock(td):
+        t.start()
+        t.join(timeout=0.5)
+        assert t.is_alive(), f"{verb} must wait for the commit lock"
+    t.join(timeout=30)
+    assert not t.is_alive() and "out" in res
+    want = {"tag_snapshot": {"t": 1}, "drop_tag": {}, "expire_table": {}}[verb]
+    assert ft._read_refs(td) == want
+    assert ft._manifest_versions(td) == ([2] if verb == "expire_table" else [1, 2])
+
+
 def test_partitions_table_inventories_live_files(spark, li_table):
     td, _df = li_table
     man = ft.read_manifest(td)
@@ -1169,33 +1203,81 @@ def test_changelog_across_schema_change_raises(spark, cust_table):
 # ---------------------------------------------------------------------------
 
 
-def test_plan_scan_spark_equals_driver_planner(spark, li_table):
-    """VERDICT r10 item 4 equivalence pin: the Spark-job planner over
-    the parquet manifest table returns the IDENTICAL file set as the
-    driver loop — closed intervals, unbounded sides, null-bounds
-    conservatism and all — so the dispatch is invisible to callers."""
-    td, _df = li_table
-    probes = [
-        (_mid(td, 0.2), _mid(td, 0.35)),
-        (None, _mid(td, 0.5)),
-        (_mid(td, 0.7), None),
-        (None, None),
-    ]
-    for lo, hi in probes:
-        drv = ft.plan_scan(td, "ship_dt", lo, hi)
-        spk = ft.plan_scan_spark(spark, td, "ship_dt", lo, hi)
-        assert sorted(drv["paths"]) == sorted(spk["paths"]), (lo, hi)
-        assert (drv["files_read"], drv["files_skipped"], drv["files_total"]) == (
-            spk["files_read"],
-            spk["files_skipped"],
-            spk["files_total"],
+def _job_plan(spark, td, preds):
+    """The scan planner in its job regime (PLAN_SPARK_THRESHOLD forced to
+    0 for this call only): pruning over the parquet manifest table."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
+        return ft._plan_box(spark, td, ft._manifest_view(td), preds, "scan")
+
+
+def _explode_entry_list(monkeypatch):
+    """Past the threshold nothing may compose the full entry list:
+    ``_resolve_manifest`` is the one point that materializes it (every
+    ``read_manifest`` goes through it), so make it raise."""
+
+    def _boom(*a, **k):
+        raise AssertionError("past the threshold no verb may read the full entry list")
+
+    monkeypatch.setattr(ft, "_resolve_manifest", _boom)
+
+
+@pytest.mark.parametrize("shape", ["range", "box"])
+def test_plan_box_regimes_agree(spark, tmp_path, shape):
+    """VERDICT r10 item 4 equivalence pin, for a range (a one-column box)
+    and a 2-D box: the job regime returns the IDENTICAL file set and
+    counters as the default driver regime — closed intervals, unbounded
+    sides, null-bounds conservatism on either dimension — and below the
+    threshold no parquet manifest table is materialized."""
+    import random
+
+    rng = random.Random(3)
+    entries = []
+    for i in range(400):
+        a, b = rng.randrange(0, 1000), rng.randrange(0, 1000)
+        entries.append(
+            {
+                "path": f"data/c000001/f{i:04d}.parquet",
+                "rows": 10,
+                "bytes": 100,
+                "seq": 1,
+                "stats": {
+                    "a": None if i % 17 == 0 else [a, a + 40],
+                    "b": None if i % 13 == 0 else [b, b + 40],
+                },
+            }
+        )
+    td = _plant_manifest(tmp_path, entries, {"a": "long", "b": "long"})
+    if shape == "range":
+        probes = [{"a": (200, 400)}, {"a": (None, 500)}, {"a": (700, None)},
+                  {"a": (None, None)}]
+        public = [ft.plan_scan(td, "a", *p["a"]) for p in probes]
+    else:
+        probes = [{"a": (200, 400), "b": (500, None)},
+                  {"a": (None, 300), "b": (100, 600)}]
+        public = [ft.plan_scan_box(td, p) for p in probes]
+
+    def shape_of(plan):
+        return sorted(plan["paths"]), (
+            plan["files_read"], plan["files_skipped"], plan["files_total"]
         )
 
+    drv = [
+        shape_of(ft._plan_box(spark, td, ft._manifest_view(td), p, "scan"))
+        for p in probes
+    ]
+    assert drv == [shape_of(p) for p in public]
+    assert not os.path.exists(ft.manifest_parquet_dir(td, 1)), (
+        "small manifests must not pay the job regime"
+    )
+    assert drv[0][1][1] > 0, "the probe must prune"
+    assert [shape_of(_job_plan(spark, td, p)) for p in probes] == drv
 
-def test_plan_scan_spark_synthetic_large_manifest(spark, tmp_path):
+
+def test_plan_box_job_regime_synthetic_large_manifest(spark, tmp_path):
     """A 2,000-entry planted manifest (including null-bounds and
-    boundary-touching entries) plans identically on both sides, and the
-    parquet manifest table is written once and reused."""
+    boundary-touching entries) plans identically in both regimes, and
+    the parquet manifest table is written once and reused."""
     import random
 
     rng = random.Random(11)
@@ -1214,32 +1296,16 @@ def test_plan_scan_spark_synthetic_large_manifest(spark, tmp_path):
         )
     td = _plant_manifest(tmp_path, entries, {"k": "long"})
     drv = ft.plan_scan(td, "k", 4000, 4500)
-    spk = ft.plan_scan_spark(spark, td, "k", 4000, 4500)
+    spk = _job_plan(spark, td, {"k": (4000, 4500)})
     assert sorted(drv["paths"]) == sorted(spk["paths"])
     assert drv["files_skipped"] == spk["files_skipped"] > 0
     pdir = ft.manifest_parquet_dir(td, 1)
     assert os.path.exists(os.path.join(pdir, "_SUCCESS"))
     mtime = os.path.getmtime(os.path.join(pdir, "_SUCCESS"))
-    ft.plan_scan_spark(spark, td, "k", 1, 2)
+    _job_plan(spark, td, {"k": (1, 2)})
     assert os.path.getmtime(os.path.join(pdir, "_SUCCESS")) == mtime, (
         "manifest parquet is per-version immutable — written once, reused"
     )
-
-
-def test_plan_scan_auto_dispatches_on_entry_count(spark, li_table):
-    """Below the threshold the driver loop plans (no manifest parquet is
-    materialized); above it the job path runs — same answer either way."""
-    td, _df = li_table
-    lo, hi = _mid(td, 0.2), _mid(td, 0.4)
-    small = ft.plan_scan_auto(spark, td, "ship_dt", lo, hi)
-    assert not os.path.exists(
-        ft.manifest_parquet_dir(td, ft.current_manifest_version(td))
-    ), "small manifests must not pay the job path"
-    big = ft.plan_scan_auto(spark, td, "ship_dt", lo, hi, threshold=1)
-    assert os.path.exists(
-        ft.manifest_parquet_dir(td, ft.current_manifest_version(td))
-    )
-    assert sorted(small["paths"]) == sorted(big["paths"])
 
 
 # ---------------------------------------------------------------------------
@@ -1313,37 +1379,6 @@ def test_update_where_rejects_unknown_set_columns(spark, li_table):
     td, _df = li_table
     with pytest.raises(ValueError, match="SET columns"):
         ft.update_where(spark, td, "ship_dt", _mid(td, 0.4), {"nope": F.lit(1)})
-
-
-def test_plan_scan_box_spark_equals_driver_planner(spark, tmp_path):
-    """Box-probe equivalence on a 2-D planted manifest: the job planner
-    and the driver loop agree file-for-file, including null-bounds
-    conservatism on one dimension."""
-    import random
-
-    rng = random.Random(3)
-    entries = []
-    for i in range(400):
-        a = rng.randrange(0, 1000)
-        b = rng.randrange(0, 1000)
-        entries.append(
-            {
-                "path": f"data/c000001/f{i:04d}.parquet",
-                "rows": 10,
-                "bytes": 100,
-                "seq": 1,
-                "stats": {
-                    "a": [a, a + 40],
-                    "b": None if i % 13 == 0 else [b, b + 40],
-                },
-            }
-        )
-    td = _plant_manifest(tmp_path, entries, {"a": "long", "b": "long"})
-    box = {"a": (200, 400), "b": (500, None)}
-    drv = ft.plan_scan_box(td, box)
-    spk = ft.plan_scan_box_spark(spark, td, box)
-    assert sorted(drv["paths"]) == sorted(spk["paths"])
-    assert drv["files_skipped"] == spk["files_skipped"] > 0
 
 
 # ---------------------------------------------------------------------------
@@ -1688,10 +1723,11 @@ def test_add_files_concurrent_double_register_conflicts(spark, tmp_path):
 
 def test_scan_range_routes_through_job_planner_over_threshold(spark, li_table, monkeypatch):
     """VERDICT r11 item 3: the two-level dispatch is the DEFAULT read
-    path — past the threshold, the public ``scan_range`` plans via the
-    Spark-job planner (the driver loop is provably not called) and the
-    rows are identical, with schema resolution served by the O(schema)
-    header sidecar instead of the O(#files) JSON manifest."""
+    path — past the threshold, the public ``scan_range`` plans as a job
+    over the parquet manifest table (the full entry list is provably
+    never composed) and the rows are identical, with schema resolution
+    served by the O(schema) header sidecar instead of the O(#files) JSON
+    manifest."""
     td, df = li_table
     lo, hi = _mid(td, 0.3), _mid(td, 0.5)
     want = sorted(
@@ -1707,11 +1743,7 @@ def test_scan_range_routes_through_job_planner_over_threshold(spark, li_table, m
     assert got_small == want
 
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
-
-    def _no_driver_plan(*a, **k):
-        raise AssertionError("driver planner must not run past the threshold")
-
-    monkeypatch.setattr(ft, "plan_scan", _no_driver_plan)
+    _explode_entry_list(monkeypatch)
     got_big = sorted(
         (r["l_orderkey"], str(r["ship_dt"]))
         for r in ft.scan_range(spark, td, "ship_dt", lo, hi).collect()
@@ -1752,10 +1784,7 @@ def test_scan_box_routes_through_job_planner_over_threshold(spark, tmp_path, mon
     assert any(t is not None for _k, _x, _y, t in want)
 
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
-    monkeypatch.setattr(
-        ft, "plan_scan_box",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("driver planner ran")),
-    )
+    _explode_entry_list(monkeypatch)
     got = sorted(
         (r["k"], r["xx"], r["y"], r["tag"])
         for r in ft.scan_box(spark, td, preds).collect()
@@ -1766,7 +1795,8 @@ def test_scan_box_routes_through_job_planner_over_threshold(spark, tmp_path, mon
 def test_point_lookup_job_path_and_bloom_plans_without_manifest(spark, tmp_path, monkeypatch):
     """plan_bloom_lookup plans off the version-checked sidecar alone;
     past the threshold point_lookup resolves its kept files through the
-    parquet manifest table — same rows either way."""
+    parquet manifest table (the full entry list is never composed) —
+    same rows either way, including a probe no file admits."""
     td = str(tmp_path / "bloomauto")
     df = spark.createDataFrame(
         [(i, (i * 7919) % 1000) for i in range(500)], "d long, k long"
@@ -1777,8 +1807,10 @@ def test_point_lookup_job_path_and_bloom_plans_without_manifest(spark, tmp_path,
     want = sorted(r["d"] for r in ft.point_lookup(spark, td, "k", values).collect())
     assert want == [1, 2]
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
+    _explode_entry_list(monkeypatch)
     got = sorted(r["d"] for r in ft.point_lookup(spark, td, "k", values).collect())
     assert got == want
+    assert ft.point_lookup(spark, td, "k", [-1]).columns == ["d", "k"]
 
 
 # ---------------------------------------------------------------------------
@@ -2235,7 +2267,7 @@ def test_manifest_parquet_from_commit_time_jsonl_no_json_parse(spark, li_table, 
         raise AssertionError("warm two-level path must not parse the JSON manifest")
 
     monkeypatch.setattr(ft, "read_manifest", _boom)
-    got = ft.plan_scan_spark(spark, td, "ship_dt", lo, hi)
+    got = _job_plan(spark, td, {"ship_dt": (lo, hi)})
     assert sorted(got["paths"]) == sorted(want["paths"])
     assert got["files_skipped"] == want["files_skipped"] > 0
 
@@ -2245,7 +2277,7 @@ def test_expire_reclaims_version_sidecars(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(rows, "k long, d long")  # noqa: E731
     ft.create_table(mk([(1, 1)]), td, stats_cols=["d"], n_files=1)
     ft.append_table(mk([(2, 2)]), td, n_files=1)
-    ft.plan_scan_spark(spark, td, "d", 0, 1)  # materialize v2's parquet manifest
+    ft.write_manifest_parquet(spark, td)  # materialize v2's parquet manifest
     ft.expire_table(td, keep_last=1)
     assert not os.path.exists(ft._entries_jsonl_path(td, 1))
     assert not os.path.exists(ft._header_path(td, 1))
@@ -2825,10 +2857,10 @@ def test_where_classifiers_agree_on_null_semantics(spark, tmp_path):
 
 
 def test_write_path_plans_as_job_past_threshold(spark, tmp_path, monkeypatch):
-    """VERDICT r12 item 2 Done-criterion: with the driver classifiers
-    monkeypatched to explode and the threshold at zero, DELETE / UPDATE
-    / MERGE (both flavors) all commit through the manifest-table job and
-    the results row-equal the driver regime's."""
+    """VERDICT r12 item 2 Done-criterion: with the driver classifier and
+    the full-entry-list composition monkeypatched to explode and the
+    threshold at zero, DELETE / UPDATE / MERGE all commit through the
+    manifest-table job and the results row-equal the driver regime's."""
     import datetime as dt
 
     def build(path):
@@ -2867,7 +2899,7 @@ def test_write_path_plans_as_job_past_threshold(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
     monkeypatch.setattr(ft, "_classify_where_driver", _boom)
-    monkeypatch.setattr(ft, "_merge_candidates_driver", _boom)
+    _explode_entry_list(monkeypatch)
     j1, j2, j3, got = run_all(t_job)
     assert got == want
     for dd, jj in zip((d1, d2, d3), (j1, j2, j3)):
@@ -2880,7 +2912,8 @@ def test_write_path_plans_as_job_past_threshold(spark, tmp_path, monkeypatch):
 
 def test_merge_mor_plans_as_job_past_threshold(spark, tmp_path, monkeypatch):
     """The MOR merge twin routes candidate selection through the same
-    job — zero rewrites preserved, visible rows equal."""
+    job (the full entry list is never composed) — zero rewrites
+    preserved, visible rows equal."""
     def build(path):
         td = str(tmp_path / path)
         ft.create_table(
@@ -2901,11 +2934,8 @@ def test_merge_mor_plans_as_job_past_threshold(spark, tmp_path, monkeypatch):
     sd = ft.merge_into_mor(spark, t_drv, src, **kw)
     want = sorted(map(tuple, ft.read_table(spark, t_drv).collect()))
 
-    def _boom(*a, **k):
-        raise AssertionError("past the threshold the driver classifier must not run")
-
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
-    monkeypatch.setattr(ft, "_merge_candidates_driver", _boom)
+    _explode_entry_list(monkeypatch)
     sj = ft.merge_into_mor(spark, t_job, src, **kw)
     assert sj["files_rewritten"] == sd["files_rewritten"] == 0
     assert sj["files_candidates"] == sd["files_candidates"]
@@ -3119,7 +3149,7 @@ def test_scan_range_composes_with_dvs_both_planners(spark, li_table, monkeypatch
     p_drv = ft.plan_scan(td, "ship_dt", lo, hi)
     assert p_drv["dv_entries"], "surviving files must carry their vectors"
     assert p_drv["files_skipped"] > 0, "pruning must still prune"
-    p_job = ft.plan_scan_spark(spark, td, "ship_dt", lo, hi)
+    p_job = _job_plan(spark, td, {"ship_dt": (lo, hi)})
     assert sorted(p_job["paths"]) == sorted(p_drv["paths"])
     assert (
         sorted((d["path"], d["target"]) for d in p_job["dv_entries"])
@@ -3200,7 +3230,7 @@ def test_pruned_scan_still_raises_on_eq_pos_deletes(spark, li_table):
     with pytest.raises(ValueError, match="equality/position"):
         ft.plan_scan(td, "ship_dt", lo, hi)
     with pytest.raises(ValueError, match="equality/position"):
-        ft.plan_scan_spark(spark, td, "ship_dt", lo, hi)
+        _job_plan(spark, td, {"ship_dt": (lo, hi)})
 
 
 def test_bloom_survives_dv_commits_and_hides_deleted_keys(spark, tmp_path):
@@ -4005,7 +4035,7 @@ def test_delta_commit_conflict_and_append_rebase(spark, tmp_path, monkeypatch):
     td, mk = _mk_delta_table(spark, tmp_path)
     monkeypatch.setattr(ft, "PLAN_SPARK_THRESHOLD", 0)
     ft.append_table(mk([(200, 200, 0.0)]), td, n_files=1)
-    base = ft._manifest_for_write(td)
+    base = ft._manifest_view(td)
     assert base["entries"] is None, "past the threshold the header view"
     # a concurrent append lands after planning
     ft.append_table(mk([(201, 201, 0.0)]), td, n_files=1)

@@ -1516,6 +1516,7 @@ def test_mmr_rerank_diversifies_near_duplicate_neighbors(spark):
     import pytest
 
     from spark_iceberg_jobs_spark.operators.similarity import (
+        MMR_MAX_POOL,
         bruteforce_topk,
         mmr_rerank,
     )
@@ -1543,6 +1544,8 @@ def test_mmr_rerank_diversifies_near_duplicate_neighbors(spark):
 
     with pytest.raises(ValueError, match="cannot exceed"):
         mmr_rerank(emb, probes, k=5, pool=3)
+    with pytest.raises(ValueError, match="MMR_MAX_POOL"):
+        mmr_rerank(emb, probes, k=1, pool=MMR_MAX_POOL + 1)
     with pytest.raises(ValueError, match="lam"):
         mmr_rerank(emb, probes, k=1, pool=2, lam=1.5)
 

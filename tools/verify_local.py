@@ -10,6 +10,11 @@ at the repo root — per-query status + wall time — so each round's complete
 local verification is a committed artifact a judge can diff without
 re-running 200+ queries (round-3 VERDICT item 3).
 
+Memory: the Spark driver heap defaults to 8g (``session.py``), and a full
+sf0.1 sweep holds about 9 GB resident. Run the sf0.01 and sf0.1 sweeps one
+after the other, not side by side (two at once got the sf0.1 JVM
+OOM-killed on a 15 GB box), or set ``SPARK_DRIVER_MEMORY`` lower.
+
 Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
 
