@@ -1308,6 +1308,43 @@ def test_plan_box_job_regime_synthetic_large_manifest(spark, tmp_path):
     )
 
 
+def test_plan_scan_spark_equals_driver_planner(spark, li_table):
+    """On a table written by the engine (date stats on ship_dt), the job
+    regime returns the IDENTICAL file set and counters as the driver
+    ``plan_scan`` — closed intervals, unbounded sides and all — so the
+    regime is invisible to callers."""
+    td, _df = li_table
+    probes = [
+        (_mid(td, 0.2), _mid(td, 0.35)),
+        (None, _mid(td, 0.5)),
+        (_mid(td, 0.7), None),
+        (None, None),
+    ]
+    for lo, hi in probes:
+        drv = ft.plan_scan(td, "ship_dt", lo, hi)
+        spk = _job_plan(spark, td, {"ship_dt": (lo, hi)})
+        assert sorted(drv["paths"]) == sorted(spk["paths"]), (lo, hi)
+        assert (drv["files_read"], drv["files_skipped"], drv["files_total"]) == (
+            spk["files_read"],
+            spk["files_skipped"],
+            spk["files_total"],
+        )
+
+
+def test_plan_scan_auto_dispatches_on_entry_count(spark, li_table):
+    """Below the threshold the driver regime plans (no manifest parquet
+    is materialized); past it the job regime runs — same answer either
+    way."""
+    td, _df = li_table
+    preds = {"ship_dt": (_mid(td, 0.2), _mid(td, 0.4))}
+    pdir = ft.manifest_parquet_dir(td, ft.current_manifest_version(td))
+    small = ft._plan_box(spark, td, ft._manifest_view(td), preds, "scan")
+    assert not os.path.exists(pdir), "small manifests must not pay the job regime"
+    big = _job_plan(spark, td, preds)
+    assert os.path.exists(pdir)
+    assert sorted(small["paths"]) == sorted(big["paths"])
+
+
 # ---------------------------------------------------------------------------
 # round 11 — executed row-level UPDATE (copy-on-write)
 # ---------------------------------------------------------------------------
