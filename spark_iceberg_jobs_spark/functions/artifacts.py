@@ -495,9 +495,11 @@ def backfill_empty_partitioned(spark, schema, out_dir: str) -> None:
     schema-bearing file with the partition column INLINE: the segment
     then reads as a normal empty parquet with the same column set, and
     unionByName coerces it against the partition-inferred sibling."""
+    from .frames import local_frame
+
     for _root, _dirs, files in os.walk(out_dir):
         if any(f.endswith(".parquet") for f in files):
             return
-    spark.createDataFrame([], schema).repartition(1).write.mode(
+    local_frame(spark, [], schema).repartition(1).write.mode(
         "overwrite"
     ).parquet(out_dir)

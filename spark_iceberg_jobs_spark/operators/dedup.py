@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cache import release, scoped_persist
+from ..functions.frames import local_frame
 from ..functions.texts import normalize, tokens
 
 
@@ -649,7 +650,7 @@ def bloom_contamination(
     positions = {r.pos for r in pos_rows}
     bloom_str = "".join("1" if i in positions else "0" for i in range(bits))
     spark = train.sparkSession
-    bloom_df = spark.createDataFrame([(bloom_str,)], "bloom string")
+    bloom_df = local_frame(spark, [(bloom_str,)], "bloom string")
 
     tr = scoped_persist(_distinct_shingles(train, n=n))
     sizes = tr.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.cache import scoped_persist
+from ..functions.frames import local_frame
 from ..functions.vectors import as_double, dot, norm
 
 
@@ -475,7 +476,8 @@ def kmeans_fit(
 def centroids_df(spark, cents: list[list[float]]) -> DataFrame:
     """Render driver-side centroids as the (cell, centv) DataFrame
     ``ivf_topk(centroids=...)`` consumes."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cell long, centv array<double>",
     )

@@ -32,6 +32,7 @@ from ..operators.aggs import (
     filtered_sum_per_key,
     top_k_by_agg,
 )
+from ..functions.frames import local_frame
 from ..functions.money import (
     dec_avg,
     dec_sum,
@@ -1403,7 +1404,8 @@ def layout_compression_lab(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders,
         [[], ["o_orderstatus", "o_orderpriority"], ["o_orderpriority", "o_orderstatus"], ["o_totalprice"]],
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (("+".join(r.ordering) or "unsorted"), r.n_files > 0, r.total_bytes > 0)
             for r in results

@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.money import SQL_REVENUE as SQL_REV
 from ..functions.money import dec_sum, money, money_sum, quantized, revenue_dec
 from ..sources import filetable as ft
@@ -1568,7 +1569,8 @@ def lake_gc_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         ft.tag_snapshot(staging, "audit-base")
         # crash debris: rows that must never serve
         debris_dir = os.path.join(staging, "data", "c009999")
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(-1), "X", _dt.date(1900, 1, 1), -1.0)],
             "o_orderkey long, o_orderstatus string, order_dt date, o_totalprice double",
         ).coalesce(1).write.parquet(debris_dir)

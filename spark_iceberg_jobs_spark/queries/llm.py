@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..operators.dedup import (
     connected_dup_clusters,
     exact_dedup,
@@ -1191,8 +1192,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_fixture(spark, sf_dir, "documents")
     merges = bpe_fit(docs, merges=8, sample_rate=_BPE_SAMPLE_RATE, salt=_BPE_SALT)
-    return spark.createDataFrame(
-        [m[:3] for m in merges], "merge_round long, merged_token string, n_occ long"
+    return local_frame(
+        spark, [m[:3] for m in merges], "merge_round long, merged_token string, n_occ long"
     ).orderBy("merge_round")
 
 
@@ -3423,8 +3424,8 @@ def dedup_cascade_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cur = cur.count()
         rows.append((stage, n_prev, n_prev - n_cur, n_cur))
         n_prev = n_cur
-    return spark.createDataFrame(
-        rows, "stage string, n_entering long, n_removed long, n_remaining long"
+    return local_frame(
+        spark, rows, "stage string, n_entering long, n_removed long, n_remaining long"
     ).orderBy("stage")
 
 
@@ -4145,12 +4146,13 @@ def text_bm25_incremental(
     """Incremental BM25 index maintenance (r4 VERDICT item 7) — the serving
     path when index build is the linear floor (the 256x scale-lab finding):
     the corpus head (doc_id % 10 != 0) is indexed once and PERSISTED as
-    parquet posting tables (tf / dlen / per-term df / 1-row count+length
-    partials — exactly what writers.py would keep warm under a table
-    format); a delta batch (doc_id % 10 == 0) is then indexed ALONE and
-    folded in WITHOUT touching the base documents again:
+    parquet posting tables (tf with its doc length dl / forward index /
+    per-term df / 1-row count+length partials — exactly what writers.py
+    would keep warm under a table format); a delta batch (doc_id % 10 ==
+    0) is then indexed ALONE and folded in WITHOUT touching the base
+    documents again:
 
-    - tf / dlen merge by append (doc ids are disjoint — per-doc state is
+    - tf merges by append (doc ids are disjoint — per-doc state is
       naturally append-only),
     - df merges by summing per-batch partial counts,
     - N and avg_dl derive from summed (n_docs, total_dl) partials,
@@ -4198,6 +4200,18 @@ def text_bm25_incremental(
       directory-layout sources — plus the package code) and stale
       siblings are TTL-swept on build.
 
+    Segment build (``build_segment``, one implementation for base and
+    delta): the segment's corpus text is read and tokenized ONCE; ``dl =
+    size(toks)`` rides as a grouping key of the (doc_id, term, dl) count
+    — every split element is one exploded row, so dl = Σ tf for each doc
+    with postings, and no doc-length aggregate or join is needed. After
+    tf is written, ``fwd`` (doc_id, term, tf), the per-term df and the
+    (count_distinct(doc_id), sum(tf)) partials are derived by reading the
+    written tf back — a few columnar splits. Nothing is persisted: a
+    cached aggregate keeps its spark.sql.shuffle.partitions partitions
+    (AQE does not coalesce a cached plan), so every job derived from it
+    ran that many tiny tasks.
+
     Scale shape: incremental cost is O(delta tokens) + O(vocab-touched),
     paid ONCE per delta version — the delta index is itself published as
     a fingerprint-keyed sibling artifact (tf/fwd/side, late r7), so the
@@ -4243,7 +4257,6 @@ def text_bm25_incremental(
         meta_cache,
         publish,
     )
-    from ..functions.cache import scoped_persist
     from ..functions.texts import tokens
 
     N_TERM_BUCKETS = 16
@@ -4257,30 +4270,6 @@ def text_bm25_incremental(
         # Python's % are both non-negative by construction and agree on
         # every signed-64 input, including MIN_VALUE.
         return F.pmod(F.xxhash64(col), F.lit(N_TERM_BUCKETS)).cast("int")
-
-    def batch_index(batch, *, broadcast_dlen: bool):
-        # tf is persisted: dl, df, AND stats all derive from it, and the
-        # delta's tokenize+explode chain must run ONCE per fold-in, not
-        # once per derived table (4x the delta cost — caught by the scale
-        # lab's first bm25_incremental run, which came out SLOWER than the
-        # full rebuild before this persist).
-        tf0 = scoped_persist(
-            batch.select("doc_id", F.explode(tokens("text")).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-        )
-        dlen = tf0.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        # denormalize dl onto each posting (Lucene-norms layout). The
-        # DELTA's dlen is delta-batch-sized — broadcast it so the serve
-        # path's fold-in costs zero shuffles; the one-time BASE build
-        # keeps the shuffle join (base dlen is corpus-doc-sized).
-        tf = tf0.join(F.broadcast(dlen) if broadcast_dlen else dlen, "doc_id")
-        df = tf0.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-        stats = dlen.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("dl").cast("long").alias("tot_dl"),
-        )
-        return tf0, tf, df, stats
 
     def side_union(df_part, stats_part):
         # one union-schema side table: tbl='df' rows carry (term, df),
@@ -4304,13 +4293,23 @@ def text_bm25_incremental(
     is_delta = F.col("doc_id") % 10 == 0
     src = f"{sf_dir}/documents.parquet"
 
-    def build_segment(staging, batch_filter, *, broadcast_dlen, fwd_parts):
+    def build_segment(staging, batch_filter, *, fwd_parts):
         # ONE implementation for both segments (the base index and the
-        # per-version delta): write the three tables into staging.
-        tf0, tf, df_part, stats_part = batch_index(
-            docs.filter(batch_filter), broadcast_dlen=broadcast_dlen
+        # per-version delta): write the three tables into staging. One
+        # tokenize pass; dl = size(toks) = Σ tf rides as a grouping key.
+        postings = (
+            docs.filter(batch_filter)
+            .select("doc_id", tokens("text").alias("toks"))
+            .select(
+                "doc_id",
+                F.size("toks").cast("long").alias("dl"),
+                F.explode("toks").alias("term"),
+            )
+            .groupBy("doc_id", "term", "dl")
+            .agg(F.count("*").alias("tf"))
+            .select("doc_id", "term", "tf", "dl")
         )
-        bucketed = tf.withColumn("term_bucket", term_bucket(F.col("term")))
+        bucketed = postings.withColumn("term_bucket", term_bucket(F.col("term")))
         (
             bucketed.repartition("term_bucket")
             .sortWithinPartitions("term")
@@ -4322,18 +4321,31 @@ def text_bm25_incremental(
         # under partitionBy — land the schema-bearing empty file so the
         # published segment stays readable (review finding, late r7)
         backfill_empty_partitioned(spark, bucketed.schema, f"{staging}/tf")
+        # fwd and side derive from the tf just written (a few columnar
+        # splits), not from a persisted aggregate: a cached plan keeps its
+        # shuffle-partition count, so each derived job would run that many
+        # tiny tasks.
+        tf = spark.read.schema(bucketed.schema).parquet(f"{staging}/tf")
         # FORWARD index companion (doc-sorted): serving needs the QUERY
         # docs' own term counts, and the inverted layout above cannot
         # row-group-prune on doc_id (every term-sorted file spans all
         # docs). Range-partitioned + sorted by doc_id, a doc_id predicate
         # prunes to ~one row group — the classic inverted+forward pair.
+        fwd = tf.select("doc_id", "term", "tf")
         (
-            tf0.repartitionByRange(fwd_parts, "doc_id")
+            fwd.repartitionByRange(fwd_parts, "doc_id")
             .sortWithinPartitions("doc_id")
             .write.mode("overwrite")
             .parquet(f"{staging}/fwd")
         )
-        backfill_empty_partitioned(spark, tf0.schema, f"{staging}/fwd")
+        backfill_empty_partitioned(spark, fwd.schema, f"{staging}/fwd")
+        # (n_docs, tot_dl): Σ tf per doc is dl, so these equal the
+        # per-doc count and Σ dl — exact integer sums
+        df_part = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+        stats_part = tf.agg(
+            F.count_distinct("doc_id").cast("long").alias("n_docs"),
+            F.sum("tf").cast("long").alias("tot_dl"),
+        )
         side_union(df_part, stats_part).write.mode("overwrite").parquet(
             f"{staging}/side"
         )
@@ -4341,9 +4353,7 @@ def text_bm25_incremental(
     base_dir, base_ver = publish(
         "bm25_index_",
         (src,),
-        lambda staging: build_segment(
-            staging, ~is_delta, broadcast_dlen=False, fwd_parts=8
-        ),
+        lambda staging: build_segment(staging, ~is_delta, fwd_parts=8),
     )
     # From here on the BASE exists only as its persisted index artifact.
     # The DELTA index is persisted the same way (late r7): fold-in
@@ -4355,9 +4365,7 @@ def text_bm25_incremental(
     delta_dir, delta_ver = publish(
         "bm25_delta_",
         (src,),
-        lambda staging: build_segment(
-            staging, is_delta, broadcast_dlen=True, fwd_parts=2
-        ),
+        lambda staging: build_segment(staging, is_delta, fwd_parts=2),
     )
 
     def build_compacted(staging: str) -> None:
@@ -4413,9 +4421,10 @@ def text_bm25_incremental(
     # payload, not data. Both immutable parts are served from the
     # metadata cache after the first call (keyed per segment-set MODE —
     # two-segment vs compacted — so mode flips never serve a stale file
-    # index). Rebuilt as a local relation so the ranking plan broadcasts
-    # it without re-running any scan, and the distinct terms drive the
-    # posting-scan prune from the same job.
+    # index). Rebuilt as an Arrow local relation (LocalTableScan: no job
+    # and no Python worker) so the ranking plan broadcasts it without
+    # re-running any scan, and the distinct terms drive the posting-scan
+    # prune from the same job.
     meta = meta_cache(
         _BM25_META_CACHE,
         f"{base_dir}|{len(segs)}",
@@ -4431,7 +4440,7 @@ def text_bm25_incremental(
             .collect()
         ]
     q_rows = meta["q_rows"]
-    qtf = spark.createDataFrame(q_rows, "query_doc long, term string, qtf long")
+    qtf = local_frame(spark, q_rows, "query_doc long, term string, qtf long")
     qterms = sorted({t for _, t, _ in q_rows})
     # Python % mirrors Spark's pmod bit-for-bit on signed-64 inputs (both
     # non-negative by construction — ADVICE r7; _xxhash64_py is the
@@ -4511,9 +4520,7 @@ def text_bm25_incremental(
     # score either way)
     n_docs_dbl = float(n_docs_tot)
     avg_dl = float(tot_dl_tot) / n_docs_dbl if n_docs_tot else 0.0
-    stats = spark.createDataFrame(
-        [(n_docs_dbl, avg_dl)], "n_docs double, avg_dl double"
-    )
+    stats = local_frame(spark, [(n_docs_dbl, avg_dl)], "n_docs double, avg_dl double")
     if prune:
         # Catalyst propagates this INSET across the equi-join onto every
         # other term-keyed child (including the artifact scan), so it

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.vectors import as_double
 from ..operators.similarity import assign_cells, kmeans_fit
 from ..sources.readers import read_fixture
@@ -315,7 +316,7 @@ def sim_ivf_incremental_topk(
             (r["cell"], [float(x) for x in r["centv"]])
             for r in spark.read.parquet(f"{index_dir}/centroids").collect()
         ]
-    cdf = spark.createDataFrame(meta["cent"], "cell long, centv array<double>")
+    cdf = local_frame(spark, meta["cent"], "cell long, centv array<double>")
 
     # The DELTA assignment is persisted as its own cell-partitioned
     # segment (the bm25_delta_ recipe): the O(delta·k) broadcast-centroid
@@ -371,8 +372,8 @@ def sim_ivf_incremental_topk(
             (r["probe_id"], [float(x) for x in r["pv"]], r["cell"])
             for r in ivf_nearest_cells(p, cdf, "probe_id", "pv", NPROBE).collect()
         ]
-    probe_cells = spark.createDataFrame(
-        meta["probes"], "probe_id long, pv array<double>, cell long"
+    probe_cells = local_frame(
+        spark, meta["probes"], "probe_id long, pv array<double>, cell long"
     )
     cells = sorted({c for _, _, c in meta["probes"]})
 

@@ -99,6 +99,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
+
 _HINT = "version-hint.text"
 
 
@@ -1535,7 +1537,8 @@ def _write_manifest_parquet_delta(
     hdr = read_manifest_header(table_dir, version)
     base_df = spark.read.parquet(base_dir)
     if d["removed"]:
-        rem = spark.createDataFrame(
+        rem = local_frame(
+            spark,
             [(p, t if t is not None else "") for p, t in (tuple(r) for r in d["removed"])],
             "_rm_path string, _rm_target string",
         )
@@ -1548,7 +1551,7 @@ def _write_manifest_parquet_delta(
     if d["added"]:
         rows, fields = _entry_rows_fields(d["added"], hdr["stats_types"])
         base_df = base_df.unionByName(
-            spark.createDataFrame(rows, ", ".join(fields)),
+            local_frame(spark, rows, ", ".join(fields)),
             allowMissingColumns=True,
         )
     base_df.coalesce(_manifest_shards(hdr)).write.mode("overwrite").parquet(out)
@@ -1900,7 +1903,7 @@ def _read_data(spark: SparkSession, table_dir: str, man: dict, data: list[dict],
             cols += ["_ft_file string", "_ft_pos long"]
         if seq_col is not None:
             cols.append(f"{seq_col} long")
-        return spark.createDataFrame([], ", ".join(cols))
+        return local_frame(spark, [], ", ".join(cols))
     return out
 
 
@@ -4414,7 +4417,8 @@ def snapshots_table(spark: SparkSession, table_dir: str) -> DataFrame:
                 json.dumps(m["summary"], sort_keys=True),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version long, parent long, operation string, is_current boolean, "
         "n_files long, n_rows long, n_bytes long, summary string",
@@ -4434,8 +4438,8 @@ def files_table(spark: SparkSession, table_dir: str) -> DataFrame:
         )
         for e in m["entries"]
     ]
-    return spark.createDataFrame(
-        rows, "file_path string, record_count long, file_size_bytes long, bounds string"
+    return local_frame(
+        spark, rows, "file_path string, record_count long, file_size_bytes long, bounds string"
     )
 
 
@@ -4608,8 +4612,8 @@ def refs_table(spark: SparkSession, table_dir: str) -> DataFrame:
         rows.append((name, "tag", v, None))
     for name, rec in sorted(_read_branches(table_dir).items()):
         rows.append((name, "branch", rec["head"], rec["base"]))
-    return spark.createDataFrame(
-        rows, "name string, type string, version long, base_version long"
+    return local_frame(
+        spark, rows, "name string, type string, version long, base_version long"
     )
 
 
@@ -4635,7 +4639,8 @@ def partitions_table(spark: SparkSession, table_dir: str) -> DataFrame:
                 e["seq"],
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file_path string, lower_bound string, upper_bound string, "
         "record_count long, file_size_bytes long, data_seq long",

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..functions.frames import local_frame
+
 #: probe cache keyed on (path, mtime_ns, size) — the footer read happens
 #: once per on-disk file VERSION, so a fixture regenerated at the same path
 #: with a different ts encoding (e.g. tests rewriting an sf_dir) re-probes
@@ -150,10 +152,10 @@ def run_available_now(
     # writer reusing the name.
     spark = result.sparkSession
     sink = spark.table(name)
-    rows = sink.collect()
+    table = sink.toArrow()
     schema = sink.schema
     spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, table, schema)
 
 
 def sliding_counts(

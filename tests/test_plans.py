@@ -905,6 +905,39 @@ def test_bm25_v2_prune_gate_is_cost_based(spark):
     )
 
 
+def test_bm25_incremental_serve_plan_has_no_python_rdd(spark, sf_dir):
+    """The serve plan's driver-made frames (the query docs' term counts
+    and the 1-row stats) are Arrow local relations: LocalTableScan, not a
+    ``Scan ExistingRDD`` over a PythonRDD whose every read starts Python
+    workers."""
+    from spark_iceberg_jobs_spark.queries.llm import text_bm25_incremental
+
+    df = text_bm25_incremental(spark, sf_dir)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_bm25_cold_build_persists_nothing(spark, sf_dir, monkeypatch, tmp_path):
+    """A cold build (fresh ARTIFACT_ROOT, so both segments are written)
+    derives fwd, df and the stats partials by reading back the tf it has
+    just written: no RDD is persisted inside the caller's cache_scope."""
+    from spark_iceberg_jobs_spark.functions import artifacts
+    from spark_iceberg_jobs_spark.functions.cache import cache_scope
+    from spark_iceberg_jobs_spark.queries.llm import text_bm25_incremental
+
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with cache_scope():
+        rows = text_bm25_incremental(spark, sf_dir).collect()
+        assert set(jsc.getPersistentRDDs().keys()) == before
+    assert rows
+    built = sorted(p.name.split("_")[1] for p in tmp_path.glob("bm25_*"))
+    assert built == ["delta", "index"], built
+
+
 def test_dpp_prunes_partitioned_fact(spark, sf_dir, tmp_path):
     """Dynamic partition pruning (SPARK-11150): when the fact table is
     hive-partitioned on the join key and the dim side carries a selective
